@@ -281,6 +281,7 @@ class LogSourceYamlSpec extends SparkSpec {
 
   test("user config with managed.type composes over the managed source dir") {
     assume(available)
+    assume(Files.isDirectory(Paths.get(exampleDir)), s"reference checkout absent: $exampleDir")
     // the reference's example/ dirs are real user configs redirecting to
     // managed sources — cloudflare's resolves to the managed chain
     val cf = LogSourceYaml.loadUserDir(s"$exampleDir/cloudflare", managedDir)
