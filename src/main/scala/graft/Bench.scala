@@ -76,8 +76,8 @@ object Bench {
         // -backed persists are untouched: steady's plan-matched cache
         // reuse (the r15 run-A lesson) is exactly preserved. INVARIANT
         // this relies on: no query memoizes a LIVE locally-checkpointed
-        // DataFrame across invocations (memo maps hold staged dirs and
-        // driver values only) — a cached checkpointed frame would fail
+        // DataFrame across invocations (util.Artifacts holds staged dirs
+        // and driver values only) — a cached checkpointed frame would fail
         // the steady run with a missing-checkpoint-block error, since
         // truncated lineage cannot recompute.
         spark.sparkContext.getPersistentRDDs.values

@@ -18,9 +18,9 @@ import org.apache.spark.sql.functions._
   * `detect(record)` body plus an ECS field-mapping pipeline such as
   * `ecs-cloudtrail`). Here the same surface compiles to a declarative
   * predicate instead: the rule participates in pushdown/pruning and runs
-  * codegen'd inside the one scan `Detection.ruleMatches` already does —
-  * evaluating a rule pack is N filters over one pass, not N×rows Python
-  * calls.
+  * codegen'd inside `Detection.ruleMatches`, which gives each rule its own
+  * filtered scan and unions them. A pack of N rules is N scans, not
+  * N×rows Python calls; one scan per pack is ROADMAP direction 1.
   *
   * Grammar covered (the public Sigma specification's core, which is what
   * the reference's backend handles):

@@ -9,13 +9,14 @@ import org.apache.spark.sql.functions._
   * metadata hooks (lib/python/matano_detection/detection/common.py:225-259).
   * Here a rule is declarative: `detect` is a Catalyst predicate Column, so
   * rules participate in pushdown/pruning and run inside codegen instead of
-  * a per-record interpreter — evaluating N rules over a table is one scan
-  * with N filters, not N×rows function calls. For the rare rule the
-  * Column algebra can't express (imperative loops with early exit,
-  * cross-field recursion), [[ImperativeRule]] wraps a `Row => Boolean` in
-  * a typed filter — the reference's whole execution model, available as
-  * the escape hatch, with [[deepget]] standing in for the Python
-  * `DeepDict.deepget` record accessor (detection/util.py:109-132).
+  * a per-record interpreter. Evaluating N rules over a table is N filtered
+  * scans, unioned (see [[ruleMatches]]), not N×rows function calls;
+  * merging them into one scan per pack is ROADMAP direction 1. For the
+  * rare rule the Column algebra can't express (imperative loops with
+  * early exit, cross-field recursion), [[ImperativeRule]] wraps a
+  * `Row => Boolean` in a typed filter — the reference's whole execution
+  * model, available as the escape hatch, with [[deepget]] standing in for
+  * the Python `DeepDict.deepget` record accessor (detection/util.py:109-132).
   */
 object Detection {
 
@@ -99,9 +100,10 @@ object Detection {
   def deepget(row: Row, path: String, default: Any): Any =
     deepget(row, path.split('.').toSeq, default)
 
-  /** Evaluate rules against an event frame: one scan, a union of filtered
-    * projections — Catalyst merges the scans and pushes each predicate.
-    * Output is the rule-match shape Alerts.aggregate consumes, plus the
+  /** Evaluate rules against an event frame: one filtered scan per rule
+    * (each pushes its own predicate), unioned. Catalyst does not merge the
+    * scans, so a pack of N rules reads its input N times; one scan per
+    * pack is ROADMAP direction 1. Output is the rule-match shape Alerts.aggregate consumes, plus the
     * `matano.alert`-style metadata columns the reference's create_alert
     * emits.
     */

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.operators.{Alerts, Detection}
 import graft.streaming.AlertStream
+import graft.util.Artifacts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import QueryDef._
@@ -19,27 +20,6 @@ object Alerting {
 
   private def events(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "events")
-
-  /** q45's written lake dirs, keyed by source-table fingerprint (see q45
-    * for why they memoize at all; [[graft.util.Fingerprint]] for why the
-    * key is a fingerprint, not the raw dir — regeneration invalidates,
-    * superseded staging dirs are deleted on eviction).
-    */
-  private val lakeRoundtripDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def memoStaged(map: scala.collection.concurrent.TrieMap[String, String],
-      dir: String, tables: Seq[String] = Seq("events"))(build: => String): String =
-    graft.util.Fingerprint.memo(map, dir, tables, "",
-      graft.util.Fingerprint.deleteDir)(build)
-  private val mergeDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val compDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val retroDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val routeDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val sidelineDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** q54's snapshot tables: (dir -> (table path, id cut)), memoized like q45. */
-  private val zoneMapDirs = scala.collection.concurrent.TrieMap.empty[String, (String, Long)]
-  private val zorderDirs = scala.collection.concurrent.TrieMap.empty[String, String]
 
   val rules: Seq[Detection.Rule] = Seq(
     Detection.SimpleRule(
@@ -253,8 +233,8 @@ object Alerting {
         // memoized per sf dir: the write half runs once per session, so a
         // second invocation (Bench warms it untimed) measures the read path
         // — partition-pruned scan + agg — not temp-dir disk throughput
-        val tmp = memoStaged(lakeRoundtripDirs, dir)({
-          val t = java.nio.file.Files.createTempDirectory("graft_lake_rt").toString
+        val tmp = Artifacts.memo("alerting.lake_roundtrip", dir, Seq("events"))({ sc =>
+          val t = sc.dir("graft_lake_rt")
           // one week of hour partitions; cluster rows by partition value so
           // each hour directory is written by a single task (the write
           // distribution an Iceberg sink would request)
@@ -296,10 +276,9 @@ object Alerting {
       "q54_lake_pruned",
       (s, dir) => {
         import graft.lake.Snapshots
-        val (tmp, cut) = graft.util.Fingerprint.memo(zoneMapDirs, dir,
-          Seq("events"), "", (v: (String, Long)) =>
-            graft.util.Fingerprint.deleteDir(v._1))({
-          val t = java.nio.file.Files.createTempDirectory("graft_lake_zm").toString
+        val (tmp, cut) = Artifacts.memo("alerting.zone_map", dir,
+            Seq("events"))({ sc =>
+          val t = sc.dir("graft_lake_zm")
           val ev = events(s, dir)
             .filter(col("ts") < lit("2024-01-02").cast("timestamp"))
             .select("event_id", "ts", "event_type", "value")
@@ -343,8 +322,8 @@ object Alerting {
       "q77_merge_upsert",
       (s, dir) => {
         import graft.lake.Snapshots
-        val tmp = memoStaged(mergeDirs, dir)({
-          val t = java.nio.file.Files.createTempDirectory("graft_lake_mg").toString
+        val tmp = Artifacts.memo("alerting.merge_upsert", dir, Seq("events"))({ sc =>
+          val t = sc.dir("graft_lake_mg")
           val base = events(s, dir)
             .filter(col("ts") < lit("2024-01-03").cast("timestamp"))
             .select("event_id", "ts", "event_type", "value")
@@ -395,8 +374,8 @@ object Alerting {
     QueryDef(
       "q78_compression_inference",
       (s, dir) => {
-        val tmp = memoStaged(compDirs, dir, Seq("documents"))({
-          val t = java.nio.file.Files.createTempDirectory("graft_comp").toString
+        val tmp = Artifacts.memo("alerting.compression", dir, Seq("documents"))({ sc =>
+          val t = sc.dir("graft_comp")
           val rows = graft.Tables.load(s, dir, "documents")
             .select("lang", "text").collect()
           def lines(p: String => Boolean) =
@@ -452,8 +431,8 @@ object Alerting {
         import graft.lake.Snapshots
         val cfg = Alerts.AlertConfig(threshold = 2, windowSeconds = 1800)
         val cut = lit("2024-01-06 14:10:00").cast("timestamp")
-        val tmp = memoStaged(retroDirs, dir)({
-          val t = java.nio.file.Files.createTempDirectory("graft_lake_retro").toString
+        val tmp = Artifacts.memo("alerting.retro_lake", dir, Seq("events"))({ sc =>
+          val t = sc.dir("graft_lake_retro")
           val m = Detection.ruleMatches(events(s, dir),
             rules.filter(_.name == "error_burst"), matchId = col("event_id"))
           val phase1 = graft.plans.AnchoredSession.aggregate(s,
@@ -523,8 +502,8 @@ object Alerting {
       "q82_routed_ingest",
       (s, dir) => {
         import graft.sources.Framing
-        val tmp = memoStaged(routeDirs, dir)({
-          val t = java.nio.file.Files.createTempDirectory("graft_route").toString
+        val tmp = Artifacts.memo("alerting.routed_ingest", dir, Seq("events"))({ sc =>
+          val t = sc.dir("graft_route")
           val rows = events(s, dir)
             .filter(col("ts") < lit("2024-01-03").cast("timestamp"))
             .select("event_id", "event_type", "value").collect()
@@ -596,8 +575,8 @@ object Alerting {
       (s, dir) => {
         import graft.sources.Framing
         import org.apache.spark.sql.types._
-        val tmp = memoStaged(sidelineDirs, dir)({
-          val t = java.nio.file.Files.createTempDirectory("graft_sideline").toString
+        val tmp = Artifacts.memo("alerting.sideline_gate", dir, Seq("events"))({ sc =>
+          val t = sc.dir("graft_sideline")
           val rows = events(s, dir)
             .filter(col("ts") < lit("2024-01-03").cast("timestamp"))
             .select("event_id", "event_type", "value").collect()
@@ -679,9 +658,8 @@ object Alerting {
       "q133_zorder_pruned",
       (s, dir) => {
         import graft.lake.{Lake, Snapshots}
-        val tmp = memoStaged(zorderDirs, dir)({
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_lake_zorder").toString
+        val tmp = Artifacts.memo("alerting.zorder", dir, Seq("events"))({ sc =>
+          val t = sc.dir("graft_lake_zorder")
           // single hour partition: z-order clusters WITHIN a partition
           // (Iceberg/Delta OPTIMIZE ZORDER semantics) — the hour
           // dimension itself is q54's partition-pruning demo; a real ts

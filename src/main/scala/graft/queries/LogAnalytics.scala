@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.operators.Enrichment
 import graft.transform.Grok
+import graft.util.Artifacts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,11 +21,6 @@ object LogAnalytics {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
-
-  // one bucketed-table build per dir per JVM; catalog names carry a dir
-  // hash (see q131) so a process that mixes dirs can never serve one
-  // dir's bucketed table for another
-  private val bucketedDirs = scala.collection.concurrent.TrieMap.empty[String, String]
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -831,8 +827,7 @@ object LogAnalytics {
         import graft.operators.Hll
         import graft.lake.Snapshots
         val ev = t(s, dir, "events")
-        val table = java.nio.file.Files
-          .createTempDirectory("graft_hll_fold").toString + "/hll"
+        val table = Artifacts.scratch("graft_hll_fold") + "/hll"
         val maxId = ev.agg(max(col("event_id"))).head.getLong(0)
         val cut2 = maxId - maxId / 3 // NOT 2*maxId/3: that product overflows
         val cuts = Seq(              // for ids near Long.MaxValue
@@ -1034,8 +1029,7 @@ object LogAnalytics {
         import graft.operators.QuantileSketch
         import graft.lake.Snapshots
         val ev = t(s, dir, "events")
-        val table = java.nio.file.Files
-          .createTempDirectory("graft_kll_fold").toString + "/kll"
+        val table = Artifacts.scratch("graft_kll_fold") + "/kll"
         val maxId = ev.agg(max(col("event_id"))).head.getLong(0)
         val cut2 = maxId - maxId / 3
         val cuts = Seq(
@@ -1174,10 +1168,8 @@ object LogAnalytics {
         val tag = java.security.MessageDigest.getInstance("MD5")
           .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
         val (evTable, usTable) = (s"graft_b_events_$tag", s"graft_b_users_$tag")
-        graft.util.Fingerprint.memo(bucketedDirs, dir, Seq("events"), "",
-            graft.util.Fingerprint.deleteDir)({
-          val base = java.nio.file.Files
-            .createTempDirectory("graft_bucketed").toString
+        Artifacts.memo("log_analytics.bucketed", dir, Seq("events"))({ sc =>
+          val base = sc.dir("graft_bucketed")
           val ev = t(s, dir, "events")
             .select(col("event_id"), col("user_id"), col("event_type"))
           val prof = ev.groupBy(col("user_id"))

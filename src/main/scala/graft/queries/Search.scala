@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.lake.Snapshots
 import graft.operators.{Dedup, InvertedIndex}
+import graft.util.Artifacts
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,8 +20,6 @@ object Search {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
-
-  private val indexFoldDirs = scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** q109's incremental fold, reusable by the Scale probe: split `d` into
     * three id-ordered batches and fold each into the term-keyed lake index
@@ -420,10 +419,9 @@ object Search {
     QueryDef(
       "q109_index_incremental",
       (s, dir) => {
-        val tmp = graft.util.Fingerprint.memo(indexFoldDirs, dir,
-            Seq("documents"), "", graft.util.Fingerprint.deleteDir)({
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_index_fold").toString
+        val tmp = Artifacts.memo("search.index_fold", dir,
+            Seq("documents"))({ sc =>
+          val t = sc.dir("graft_index_fold")
           indexFold(s, docs(s, dir), s"$t/index")
           t
         })

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{Curation, Dedup, Multimodal, Privacy, TextAnalysis}
+import graft.util.Artifacts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import QueryDef._
@@ -18,16 +19,6 @@ object TextPipeline {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
 
-  private val streamFoldDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** q96/q153's staged fold dirs, keyed by documents-table fingerprint
-    * (not the raw path — regeneration invalidates; superseded staging
-    * dirs are deleted on eviction). [[graft.util.Fingerprint]] discipline.
-    */
-  private def stagedFold(dir: String, suffix: String)(build: => String): String =
-    graft.util.Fingerprint.memo(streamFoldDirs, dir, Seq("documents"),
-      suffix, graft.util.Fingerprint.deleteDir)(build)
-
   /** q163/q164's shared trained unigram model, memoized per (corpus
     * fingerprint, params): training is deterministic (exact-arithmetic
     * hard EM), so both queries — and repeat bench invocations — reuse
@@ -36,13 +27,10 @@ object TextPipeline {
     * What's-wrong #2). The `pre` frame both callers pass is the same
     * en-corpus pretoken frequency table by construction.
     */
-  private val unigramModels = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[graft.operators.Unigram.UnigramPiece]]
-
   private def trainedUnigramModel(dir: String, pre: DataFrame,
       vocabSize: Int, rounds: Int): Seq[graft.operators.Unigram.UnigramPiece] =
-    graft.util.Fingerprint.memo(unigramModels, dir, Seq("documents"),
-      s"#unigram#v$vocabSize#r$rounds")(
+    Artifacts.memo(s"text.unigram.v$vocabSize.r$rounds", dir,
+        Seq("documents"))(_ =>
       graft.operators.Unigram.trainUnigram(pre, vocabSize, rounds))
 
   /** q102/q136/q175's shared trained BPE merge list — the same memo
@@ -50,23 +38,18 @@ object TextPipeline {
     * result-neutral): all three queries derive the identical en-corpus
     * pretoken frequency table and train the same 6 rounds.
     */
-  private val bpeMergeModels = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[graft.operators.Bpe.BpeMerge]]
-
   private def trainedBpeMerges(dir: String, pre: DataFrame,
       rounds: Int): Seq[graft.operators.Bpe.BpeMerge] =
-    graft.util.Fingerprint.memo(bpeMergeModels, dir, Seq("documents"),
-      s"#bpe#r$rounds")(
+    Artifacts.memo(s"text.bpe.r$rounds", dir, Seq("documents"))(_ =>
       graft.operators.Bpe.trainBpe(pre, rounds))
 
   /** q195/q196's shared BYTE-level BPE model (same memo discipline; the
     * byte variant trains on the multi-byte-spliced en corpus, so its
-    * suffix keys separately from the char model's).
+    * name keys separately from the char model's).
     */
   private def trainedByteBpeMerges(dir: String, pre: DataFrame,
       rounds: Int): Seq[graft.operators.Bpe.BpeMerge] =
-    graft.util.Fingerprint.memo(bpeMergeModels, dir, Seq("documents"),
-      s"#bytebpe#r$rounds")(
+    Artifacts.memo(s"text.byte_bpe.r$rounds", dir, Seq("documents"))(_ =>
       graft.operators.Bpe.trainByteBpe(pre, rounds))
 
   /** q195/q196's shared fixture: the en corpus with a multi-byte UTF-8
@@ -132,9 +115,8 @@ object TextPipeline {
     * the curated corpus): both read the same committed stage tables.
     */
   private def webPipelineStaged(s: SparkSession, dir: String): String =
-    stagedFold(dir, "#q199") {
-      val t = java.nio.file.Files
-        .createTempDirectory("graft_web_pipeline").toString
+    Artifacts.memo("text.web_pipeline", dir, Seq("documents")) { sc =>
+      val t = sc.dir("graft_web_pipeline")
       graft.operators.WebCuration.run(s, webPipelineCorpus(s, dir), t,
         suffixes = Seq("com", "net", "org", "de", "uk", "co.uk", "io"),
         blockedDomains = Seq("example.net", "badsite.co.uk"),
@@ -491,13 +473,9 @@ object TextPipeline {
     * discipline as [[trainedUnigramModel]] (deterministic training,
     * result-neutral; re-training per query is pure floor cost).
     */
-  private val wpModels = scala.collection.concurrent.TrieMap
-    .empty[String, graft.operators.WordPiece.WpModel]
-
   private def trainedWordPieceModel(dir: String, pre: DataFrame,
       rounds: Int): graft.operators.WordPiece.WpModel =
-    graft.util.Fingerprint.memo(wpModels, dir, Seq("documents"),
-      s"#wordpiece#r$rounds")(
+    Artifacts.memo(s"text.wordpiece.r$rounds", dir, Seq("documents"))(_ =>
       graft.operators.WordPiece.trainWordPiece(pre, rounds))
 
   /** One unrolled WordPiece training round for the q165/q166 oracles
@@ -2457,8 +2435,8 @@ object TextPipeline {
           .filter(length(col("payload")) >= 16)
           .withColumn("w", lit(16))
           .select("doc_id", "payload", "w")
-        val tmp = stagedFold(dir, "") {
-          val t = java.nio.file.Files.createTempDirectory("graft_stream_fold").toString
+        val tmp = Artifacts.memo("text.stream_fold", dir, Seq("documents")) { sc =>
+          val t = sc.dir("graft_stream_fold")
           val hashes = Multimodal.aHash(s, d, "doc_id", "payload", "w")
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           // id-ordered thirds emulate arrival order (twins land last);
@@ -4333,9 +4311,8 @@ object TextPipeline {
                 col("doc_id").cast("string"),
                 lit(" all rights reserved")))
               .otherwise(lit(""))).as("text"))
-        val tmp = stagedFold(dir, "#q171") {
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_para_fold").toString
+        val tmp = Artifacts.memo("text.para_fold", dir, Seq("documents")) { sc =>
+          val t = sc.dir("graft_para_fold")
           val maxId = spliced.agg(max(col("doc_id"))).head.getLong(0)
           // id-ordered thirds emulate arrival order; the oracle is
           // independent of where these cuts fall
@@ -4522,8 +4499,8 @@ object TextPipeline {
           .select((col("doc_id") + 1000000L).as("doc_id"),
             expr("concat(substring(text, 1, length(text) - 4), 'abcd')").as("text"))
         val d = base.unionAll(twins)
-        val tmp = stagedFold(dir, "#q153") {
-          val t = java.nio.file.Files.createTempDirectory("graft_lsh_fold").toString
+        val tmp = Artifacts.memo("text.lsh_fold", dir, Seq("documents")) { sc =>
+          val t = sc.dir("graft_lsh_fold")
           // id-ordered thirds emulate arrival order (twins land last);
           // the oracle is independent of where these cuts fall
           val maxBase = base.agg(max(col("doc_id"))).head.getLong(0)
@@ -4768,9 +4745,8 @@ object TextPipeline {
         import graft.lake.Snapshots
         import graft.streaming.DedupIndex
         val spliced = c4SpanSpliced(s, dir)
-        val tmp = stagedFold(dir, "#q176") {
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_span_fold").toString
+        val tmp = Artifacts.memo("text.span_fold", dir, Seq("documents")) { sc =>
+          val t = sc.dir("graft_span_fold")
           val maxId = spliced.agg(max(col("doc_id"))).head.getLong(0)
           // id-ordered thirds emulate arrival order; the oracle is
           // independent of where these cuts fall
@@ -5003,9 +4979,8 @@ object TextPipeline {
       "q185_release_pipeline",
       (s, dir) => {
         import graft.operators.Release
-        val tmp = stagedFold(dir, "#q185") {
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_release").toString
+        val tmp = Artifacts.memo("text.release", dir, Seq("documents")) { sc =>
+          val t = sc.dir("graft_release")
           Release.buildEdition(s, docs(s, dir), "doc_id", "lang",
             "n_chars", cutBp = 1000L, budgetNum = 9L, budgetDen = 10L,
             epochCap = 1L, table = s"$t/editionA")
@@ -5107,9 +5082,8 @@ object TextPipeline {
       (s, dir) => {
         import graft.streaming.AllocationFold
         val d = docs(s, dir)
-        val tmp = stagedFold(dir, "#q186") {
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_unimax_fold").toString
+        val tmp = Artifacts.memo("text.unimax_fold", dir, Seq("documents")) { sc =>
+          val t = sc.dir("graft_unimax_fold")
           val maxId = d.agg(max(col("doc_id"))).head.getLong(0)
           val cuts = Seq(
             col("doc_id") < maxId / 3,
@@ -5368,9 +5342,8 @@ object TextPipeline {
         val d = docs(s, dir).select(col("doc_id"), col("lang"),
           size(graft.functions.TextFunctions.tokens(col("text")))
             .cast("long").as("n_tokens"))
-        val tmp = stagedFold(dir, "#q191") {
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_pack_fold").toString
+        val tmp = Artifacts.memo("text.pack_fold", dir, Seq("documents")) { sc =>
+          val t = sc.dir("graft_pack_fold")
           val maxId = d.agg(max(col("doc_id"))).head.getLong(0)
           val cuts = Seq(
             col("doc_id") < maxId / 3,
@@ -5437,9 +5410,8 @@ object TextPipeline {
       (s, dir) => {
         import graft.streaming.AllocationFold
         val d = docs(s, dir)
-        val tmp = stagedFold(dir, "#q193") {
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_take_fold").toString
+        val tmp = Artifacts.memo("text.take_fold", dir, Seq("documents")) { sc =>
+          val t = sc.dir("graft_take_fold")
           val maxId = d.agg(max(col("doc_id"))).head.getLong(0)
           val cuts = Seq(
             col("doc_id") < maxId / 3,
@@ -5891,9 +5863,8 @@ object TextPipeline {
       (s, dir) => {
         import graft.lake.Snapshots
         import graft.operators.Release
-        val tmp = stagedFold(dir, "#q201") {
-          val base = java.nio.file.Files
-            .createTempDirectory("graft_factory").toString
+        val tmp = Artifacts.memo("text.factory", dir, Seq("documents")) { sc =>
+          val base = sc.dir("graft_factory")
           val t199 = webPipelineStaged(s, dir)
           def withTokens(k: Int) = Snapshots.read(s, s"$t199/s$k")
             .select(col("doc_id"), col("lang"),
@@ -6012,9 +5983,8 @@ object TextPipeline {
         import graft.lake.Snapshots
         import graft.operators.WebCuration
         val d = webPipelineCorpus(s, dir)
-        val tmp = stagedFold(dir, "#q202") {
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_web_fold").toString
+        val tmp = Artifacts.memo("text.web_fold", dir, Seq("documents")) { sc =>
+          val t = sc.dir("graft_web_fold")
           val maxId = d.agg(max(col("doc_id"))).head.getLong(0)
           val cuts = Seq(
             col("doc_id") < maxId / 3,

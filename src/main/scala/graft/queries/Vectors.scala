@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.VectorFunctions
 import graft.operators.Similarity
+import graft.util.Artifacts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import QueryDef._
@@ -22,9 +23,6 @@ object Vectors {
   /** DuckDB scalar mirrors of VectorFunctions (sequential list_sum). */
   private def sqlDot(a: String, b: String) =
     s"list_sum(list_transform(range(1, 65), i -> $a[i] * $b[i]))"
-
-  /** q143's folded IVF index dirs, keyed by corpus fingerprint (q45 convention). */
-  private val ivfFoldDirs = scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** Build the q143 lake-resident IVF index: corpus assignments arrive in
     * three id-cut batches, each a pure APPEND of (id, vec, bucket) rows
@@ -78,8 +76,6 @@ object Vectors {
   private def sqlDotInt(a: String, b: String) =
     s"list_sum(list_transform(range(1, 65), i -> $a[i] * $b[i]))"
 
-  private val pipeDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** One unrolled integer-Lloyd round (assignment → per-dim rounded mean →
     * empty clusters keep codes) — chained `cent0 … centR` CTEs give the
     * q95 oracle the exact round-for-round mirror of
@@ -130,54 +126,22 @@ object Vectors {
                        THEN 127.0 / list_max(list_transform($v, y -> abs(y)))
                        ELSE 0.0 END) + 0.5) AS BIGINT))))"""
 
-  /** Per-corpus memo through [[graft.util.Fingerprint]] (the shared
-    * helper all memo sites key through since r18): keyed by the
-    * embeddings table's filesystem fingerprint, not the raw path —
-    * regeneration under the same dir invalidates, and superseded
-    * entries are evicted (with their staging dirs deleted when
-    * `onEvict` = deleteDir) rather than accumulating.
-    */
-  private def memoV[V](map: scala.collection.concurrent.TrieMap[String, V],
-      dir: String, onEvict: V => Unit = (_: V) => ())(build: => V): V =
-    graft.util.Fingerprint.memo(map, dir, Seq("embeddings"), "", onEvict)(build)
-
-  /** q156/q157's folded IVF-PQ index dirs, keyed by corpus fingerprint. */
-  private val pqFoldDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** q156/q157's TRAINED codebook, keyed by corpus fingerprint: like the folded index
-    * itself, the book is an immutable per-corpus-snapshot artifact —
+  /** q156/q157's TRAINED codebook, memoized per corpus like the folded
+    * index itself: the book is an immutable per-corpus-snapshot artifact —
     * production trains it once and every encode/search ships it as plan
     * literals; the per-subspace Lloyd loop is ~a dozen driver jobs, so
     * re-training per query call was pure floor cost. Deterministic
     * (exactRounds integer Lloyd), so memoization cannot change results.
-    */
-  private val pqBookDirs = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Long, Seq[Long])]]
-
-  /** q161's residual-domain codebook, same memoization rationale. */
-  private val pqResBookDirs = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Long, Seq[Long])]]
-
-  /** Train-once surface for the q156/q157 book (subspaces=4, 2 exact
-    * rounds over the id≥8 corpus seeded by rows id<8 — the fixture
-    * contract both queries and both oracles unroll).
+    * Subspaces=4, 2 exact rounds over the id≥8 corpus seeded by rows
+    * id<8 — the fixture contract both queries and both oracles unroll.
     */
   private def trainedBook(coded: DataFrame, dir: String): Seq[(Long, Seq[Long])] =
-    memoV(pqBookDirs, dir)({
+    Artifacts.memo("vectors.pq_book", dir, Seq("embeddings"))(_ => {
       val seeds = coded.filter(col("id") < 8)
         .select(col("id").as("cid"), col("code"))
       Similarity.pqTrainCodebook(coded.filter(col("id") >= 8), seeds,
         subspaces = 4, maxRounds = 2)
     })
-
-  /** q94's staged ground truth, keyed by corpus fingerprint: the brute-force exact
-    * neighbors are the audit's one expensive artifact and are immutable
-    * for a given corpus snapshot — computed once (the ivfFoldDirs
-    * memoization convention) and reused across audits; k·|queries| id
-    * pairs, driver-resident by construction.
-    */
-  private val annTruthDirs =
-    scala.collection.concurrent.TrieMap.empty[String, Array[(Long, Long)]]
 
   /** One unrolled 16-dim Lloyd round over subspace `j`'s sub-vectors —
     * [[sqlLloyd]]'s shape re-parameterized for the PQ codebook training
@@ -350,10 +314,8 @@ object Vectors {
       "q143_ivf_lake_fold",
       (s, dir) => {
         import graft.lake.{Lake, Snapshots}
-        val tmp = memoV(ivfFoldDirs, dir,
-            graft.util.Fingerprint.deleteDir)({
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_ivf_fold").toString
+        val tmp = Artifacts.memo("vectors.ivf_fold", dir, Seq("embeddings"))({ sc =>
+          val t = sc.dir("graft_ivf_fold")
           ivfFold(s, dir, s"$t/ivf")
           t
         })
@@ -653,7 +615,11 @@ object Vectors {
         val assigned = Similarity.ivfAssign(corpus, centroids)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val queries = v.filter(col("id") >= 8 && col("id") <= 17)
-        val truth = memoV(annTruthDirs, dir)(
+        // q94's ground truth: the brute-force exact neighbors are the
+        // audit's one expensive artifact and immutable for a corpus
+        // snapshot — computed once and reused across audits; k·|queries|
+        // id pairs, driver-resident by construction
+        val truth = Artifacts.memo("vectors.ann_truth", dir, Seq("embeddings"))(_ =>
             Similarity.exactNeighbors(assigned, queries, k = 5)
               .collect().map(r => (r.getLong(0), r.getLong(1))))
           .toSeq.toDF("qid", "neighbor")
@@ -748,9 +714,8 @@ object Vectors {
           .select(col("id"),
           VectorFunctions.quantizeInt8(col("vec"),
             VectorFunctions.int8Scale(col("vec"))).as("code"))
-        val tmp = memoV(pipeDirs, dir,
-            graft.util.Fingerprint.deleteDir)({
-          val t = java.nio.file.Files.createTempDirectory("graft_embed_pipe").toString
+        val tmp = Artifacts.memo("vectors.embed_pipe", dir, Seq("embeddings"))({ sc =>
+          val t = sc.dir("graft_embed_pipe")
           val seeds = coded.filter(col("id") < 8)
             .select(col("id").as("cid"), col("code"))
           val corpus = coded.filter(col("id") >= 8)
@@ -1034,10 +999,8 @@ object Vectors {
           .select(col("id").as("cid"), col("code"))
         val corpus = coded.filter(col("id") >= 8)
         val book = trainedBook(coded, dir)
-        val tmp = memoV(pqFoldDirs, dir,
-            graft.util.Fingerprint.deleteDir)({
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_ivfpq_fold").toString
+        val tmp = Artifacts.memo("vectors.ivfpq_fold", dir, Seq("embeddings"))({ sc =>
+          val t = sc.dir("graft_ivfpq_fold")
           pqFold(s, dir, s"$t/ivfpq", book)
           t
         })
@@ -1266,7 +1229,8 @@ object Vectors {
           // checkpoint job per call would outweigh the single pass
           // (kmeansTrainInt8 checkpoints its own input on the one
           // training call)
-        val book = memoV(pqResBookDirs, dir)(
+        // q161's residual-domain codebook, memoized like trainedBook
+        val book = Artifacts.memo("vectors.pq_res_book", dir, Seq("embeddings"))(_ =>
           Similarity.pqTrainCodebook(
             assigned.select(col("id"), col("res").as("code")),
             assigned.filter(col("id") < 16)
@@ -1700,7 +1664,7 @@ object Vectors {
       .join(cents.withColumnRenamed("cid", "bucket"), "bucket")
       .select(col("id"),
         zip_with(col("code"), col("ccode"), (x, y) => x - y).as("res"))
-    val resBook = memoV(pqResBookDirs, dir)(
+    val resBook = Artifacts.memo("vectors.pq_res_book", dir, Seq("embeddings"))(_ =>
       Similarity.pqTrainCodebook(
         resAssigned.select(col("id"), col("res").as("code")),
         resAssigned.filter(col("id") < 16)

@@ -192,22 +192,24 @@ class IngestSpec extends SparkSpec {
 
   test("metadata routing: key patterns route, skip, and default per object") {
     val tmp = Files.createTempDirectory("graft_route")
-    Files.write(tmp.resolve("acct_CloudTrail-Digest_x.json"), "d1\nd2\n".getBytes("UTF-8"))
-    Files.write(tmp.resolve("acct_CloudTrail-Insights_y.json"), "i1\n".getBytes("UTF-8"))
-    Files.write(tmp.resolve("acct_CloudTrail_z.json"), "r1\nr2\nr3\n".getBytes("UTF-8"))
-    Files.write(tmp.resolve("junk_manifest.checksum"), "x\n".getBytes("UTF-8"))
-    val routed = Framing.routeByFileMetadata(
-      spark.read.text(tmp.toString),
-      Seq(
-        Framing.MetadataRoute("checksum", None), // skip
-        Framing.MetadataRoute("Digest", Some("digest")),
-        Framing.MetadataRoute("Insights", Some("insights"))))
-    val counts = routed.groupBy("__table").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(counts == Map("digest" -> 2L, "insights" -> 1L, "default" -> 3L))
-    val tables = Framing.routedTables(routed, Seq("digest", "insights", "default"))
-    assert(tables("digest").count() == 2)
-    assert(tables("default").columns.toSeq == Seq("value"))
+    try {
+      Files.write(tmp.resolve("acct_CloudTrail-Digest_x.json"), "d1\nd2\n".getBytes("UTF-8"))
+      Files.write(tmp.resolve("acct_CloudTrail-Insights_y.json"), "i1\n".getBytes("UTF-8"))
+      Files.write(tmp.resolve("acct_CloudTrail_z.json"), "r1\nr2\nr3\n".getBytes("UTF-8"))
+      Files.write(tmp.resolve("junk_manifest.checksum"), "x\n".getBytes("UTF-8"))
+      val routed = Framing.routeByFileMetadata(
+        spark.read.text(tmp.toString),
+        Seq(
+          Framing.MetadataRoute("checksum", None), // skip
+          Framing.MetadataRoute("Digest", Some("digest")),
+          Framing.MetadataRoute("Insights", Some("insights"))))
+      val counts = routed.groupBy("__table").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(counts == Map("digest" -> 2L, "insights" -> 1L, "default" -> 3L))
+      val tables = Framing.routedTables(routed, Seq("digest", "insights", "default"))
+      assert(tables("digest").count() == 2)
+      assert(tables("default").columns.toSeq == Seq("value"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 
   test("streaming dedup within watermark drops re-delivered file ids") {
