@@ -18,9 +18,8 @@ import org.apache.spark.sql.functions._
   * `detect(record)` body plus an ECS field-mapping pipeline such as
   * `ecs-cloudtrail`). Here the same surface compiles to a declarative
   * predicate instead: the rule participates in pushdown/pruning and runs
-  * codegen'd inside `Detection.ruleMatches`, which gives each rule its own
-  * filtered scan and unions them. A pack of N rules is N scans, not
-  * N×rows Python calls; one scan per pack is ROADMAP direction 1.
+  * codegen'd inside `Detection.ruleMatches`, which evaluates a pack of N
+  * rules in one scan of its input, not N scans or N×rows Python calls.
   *
   * Grammar covered (the public Sigma specification's core, which is what
   * the reference's backend handles):

@@ -9,10 +9,9 @@ import org.apache.spark.sql.functions._
   * metadata hooks (lib/python/matano_detection/detection/common.py:225-259).
   * Here a rule is declarative: `detect` is a Catalyst predicate Column, so
   * rules participate in pushdown/pruning and run inside codegen instead of
-  * a per-record interpreter. Evaluating N rules over a table is N filtered
-  * scans, unioned (see [[ruleMatches]]), not N×rows function calls;
-  * merging them into one scan per pack is ROADMAP direction 1. For the
-  * rare rule the Column algebra can't express (imperative loops with
+  * a per-record interpreter. Evaluating N rules over a table is one scan
+  * per pack (see [[ruleMatches]]), not N scans or N×rows function calls.
+  * For the rare rule the Column algebra can't express (imperative loops with
   * early exit, cross-field recursion), [[ImperativeRule]] wraps a
   * `Row => Boolean` in a typed filter — the reference's whole execution
   * model, available as the escape hatch, with [[deepget]] standing in for
@@ -31,11 +30,6 @@ object Detection {
     def severity: String = "notice"
     def threshold: Int = 1
     def windowSeconds: Long = 3600
-    /** How this rule selects matching events. Declarative rules filter by
-      * the `detect` Column (pushdown + codegen); the imperative escape
-      * hatch overrides with a typed filter.
-      */
-    def filterEvents(events: DataFrame): DataFrame = events.filter(detect)
   }
 
   final case class SimpleRule(
@@ -48,9 +42,9 @@ object Detection {
   /** The imperative escape hatch: `detect` is the reference's
     * `detect(record) -> bool`, evaluated per row via a typed filter. The
     * cost is explicit and confined to the rules that need it: a
-    * deserialization boundary per row and no predicate pushdown — the
-    * scan itself still prunes columns, and every other (declarative) rule
-    * in the same `ruleMatches` call keeps its codegen'd path.
+    * deserialization boundary per row and no predicate pushdown — its
+    * branch still prunes columns, and the declarative rules of the same
+    * `ruleMatches` call keep their single codegen'd scan.
     */
   final case class ImperativeRule(
       name: String, detectRow: Row => Boolean,
@@ -59,7 +53,7 @@ object Detection {
       override val threshold: Int = 1,
       override val windowSeconds: Long = 3600) extends Rule {
     def detect: Column = lit(true) // selection happens in filterEvents
-    override def filterEvents(events: DataFrame): DataFrame = {
+    def filterEvents(events: DataFrame): DataFrame = {
       // bind the function to a local so the filter closure serializes just
       // it — referencing the field would capture the whole rule instance,
       // whose Column members are not serializable
@@ -100,31 +94,50 @@ object Detection {
   def deepget(row: Row, path: String, default: Any): Any =
     deepget(row, path.split('.').toSeq, default)
 
-  /** Evaluate rules against an event frame: one filtered scan per rule
-    * (each pushes its own predicate), unioned. Catalyst does not merge the
-    * scans, so a pack of N rules reads its input N times; one scan per
-    * pack is ROADMAP direction 1. Output is the rule-match shape Alerts.aggregate consumes, plus the
+  /** Evaluate rules against an event frame. The declarative rules of a pack
+    * share one scan: the input is filtered once by the OR of their
+    * predicates (a WHERE treats null as false, so this keeps exactly the
+    * rows some rule matches, and stays a pushable data filter), then one
+    * generator emits a row per (event, matching rule) — an event that
+    * matches k rules gives k rows. `matchId` and `ts` are evaluated once
+    * per event. A single declarative rule is a plain filter. Each
+    * [[ImperativeRule]] keeps its typed-filter branch, unioned on. Output
+    * is the rule-match shape Alerts.aggregate consumes, plus the
     * `matano.alert`-style metadata columns the reference's create_alert
     * emits.
     */
   def ruleMatches(events: DataFrame, rules: Seq[Rule], matchId: Column,
-      ts: Column = col("ts")): DataFrame =
-    if (rules.isEmpty)
-      // zero rules → zero matches with the match schema, not a crash
-      events.limit(0).select(
-        lit("").as("rule_name"), lit("").as("dedupe"),
-        lit(0L).as("match_id"), ts.as("ts"), lit("").as("severity"),
-        lit(0).as("threshold"), lit(0L).as("deduplication_window"))
-    else rules.map { r =>
-      r.filterEvents(events).select(
-        lit(r.name).as("rule_name"),
-        r.dedupe.cast("string").as("dedupe"),
-        matchId.cast("long").as("match_id"),
-        ts.as("ts"),
-        lit(r.severity).as("severity"),
-        lit(r.threshold).as("threshold"),
-        lit(r.windowSeconds).as("deduplication_window"))
-    }.reduce(_.unionAll(_))
+      ts: Column = col("ts")): DataFrame = {
+    def meta(r: Rule): Seq[Column] = Seq(
+      lit(r.name).as("rule_name"), r.dedupe.cast("string").as("dedupe"),
+      lit(r.severity).as("severity"), lit(r.threshold).as("threshold"),
+      lit(r.windowSeconds).as("deduplication_window"))
+    def project(matched: DataFrame, perRule: Seq[Column]): DataFrame =
+      matched.select(perRule :+ matchId.cast("long").as("match_id") :+ ts.as("ts"): _*)
+        .select(MatchColumns.map(col): _*)
+    val imperative = rules.collect { case r: ImperativeRule => r }
+    val packScan = rules.filterNot(_.isInstanceOf[ImperativeRule]) match {
+      case Seq() => None
+      case Seq(r) => Some(project(events.filter(r.detect), meta(r)))
+      case rs =>
+        val hits = array(rs.map(r =>
+          struct(meta(r) :+ coalesce(r.detect, lit(false)).as("hit"): _*)): _*)
+        Some(project(events.filter(rs.map(_.detect).reduce(_ || _)),
+          Seq(inline(filter(hits, _.getField("hit"))))))
+    }
+    (packScan.toSeq ++ imperative.map(r => project(r.filterEvents(events), meta(r))))
+      .reduceOption(_.unionAll(_))
+      .getOrElse(
+        // zero rules → zero matches with the match schema, not a crash
+        events.limit(0).select(
+          lit("").as("rule_name"), lit("").as("dedupe"),
+          lit(0L).as("match_id"), ts.as("ts"), lit("").as("severity"),
+          lit(0).as("threshold"), lit(0L).as("deduplication_window")))
+  }
+
+  /** Column order of [[ruleMatches]] output. */
+  private val MatchColumns = Seq("rule_name", "dedupe", "match_id", "ts", "severity",
+    "threshold", "deduplication_window")
 
   /** Project aggregated alerts into the reference's matano_alerts row shape
     * (FIXTURES.md F8 / managed matano_alerts log_source): `ts` +

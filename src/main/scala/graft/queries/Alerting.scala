@@ -38,12 +38,15 @@ object Alerting {
 
   /** Alert rows with configs applied per rule (threshold/window vary).
     * Uses the native AnchoredSession operator (plans.AnchoredSession) —
-    * one hash exchange + sort per rule, streaming InternalRow fold.
+    * one hash exchange + sort per rule, streaming InternalRow fold. Each
+    * rule's matches come from its own single-rule `ruleMatches`: a
+    * `rule_name` filter over the whole pack's matches would sit above the
+    * pack's one generator and evaluate every rule per aggregate.
     */
   private def alerts(s: SparkSession, dir: String): DataFrame =
     rules.map { r =>
       graft.plans.AnchoredSession.aggregate(s,
-        matches(s, dir).filter(col("rule_name") === r.name),
+        Detection.ruleMatches(events(s, dir), Seq(r), matchId = col("event_id")),
         Alerts.AlertConfig(r.threshold, r.windowSeconds))
     }.reduce(_.unionAll(_))
 
@@ -566,8 +569,9 @@ object Alerting {
     // flows the real chain: line framing → pre-transform try-parse
     // (malformed lines stay raw → parse_error sideline) → untyped
     // projection → SchemaResolver.resolve (try_cast mismatches →
-    // schema_mismatch sideline, clean rows project). One scan, three
-    // outputs, no job failure on bad rows — reference
+    // schema_mismatch sideline, clean rows project). Three outputs, each
+    // its own filtered read of the one fixture (the union's branches do not
+    // share a scan), no job failure on bad rows — reference
     // transformer/src/main.rs:955-998, 1433-1494. The oracle
     // reconstructs every stage's count/sum/max from the event_id rules.
     QueryDef(

@@ -13,8 +13,11 @@ import org.apache.spark.sql.types._
   * project the input onto the target StructType with try_cast semantics —
   * extra columns drop, missing columns null-fill, incompatible values null
   * out and raise a per-row error flag; `resolve` returns the clean frame,
-  * `sidelined` the rejected originals with an error-kind column. One scan,
-  * two filtered outputs — no job failure on bad rows.
+  * `sidelined` the rejected originals with an error-kind column — no job
+  * failure on bad rows. Both outputs are lazy filters of one flagged frame,
+  * so each action over them re-reads the input; a caller that writes both
+  * ([[graft.streaming.Ingest.processBatch]]) persists the [[flag]]ged frame
+  * and [[split]]s that, to read its input once.
   */
 object SchemaResolver {
 
@@ -45,24 +48,44 @@ object SchemaResolver {
 
   final case class Resolved(resolved: DataFrame, sidelined: DataFrame)
 
-  /** Resolve `df` to `target`; rows where any value fails to convert go to
-    * `sidelined` (original columns + `error_kind`), the rest are projected
-    * clean. Extra input columns are dropped, missing target columns null.
-    */
-  def resolve(df: DataFrame, target: StructType): Resolved = {
-    val src = df.schema
-    val cols = target.fields.map { tf =>
+  /** The per-row mismatch flag column [[flag]] adds and [[split]] drops. */
+  val ErrorFlag = "__graft_err"
+
+  /** Per target field: the projected value and its mismatch flag. */
+  private def projection(src: StructType, target: StructType): Seq[(Column, Column)] =
+    target.fields.toSeq.map { tf =>
       src.fields.find(_.name == tf.name) match {
         case Some(sf) => castTo(sf.dataType, tf.dataType, col(tf.name))
         case None => (lit(null).cast(tf.dataType), lit(false))
       }
     }
-    val errFlag = cols.map(_._2).reduceOption(_ || _).getOrElse(lit(false))
-    val flagged = df.withColumn("__graft_err", coalesce(errFlag, lit(false)))
-    val clean = flagged.filter(!col("__graft_err"))
-      .select(target.fields.zip(cols).map { case (tf, (v, _)) => v.as(tf.name) }.toIndexedSeq: _*)
-    val bad = flagged.filter(col("__graft_err")).drop("__graft_err")
+
+  /** `df` plus the boolean [[ErrorFlag]] column: true where any value fails
+    * to convert to `target`.
+    */
+  def flag(df: DataFrame, target: StructType): DataFrame = {
+    val errFlag = projection(df.schema, target).map(_._2).reduceOption(_ || _)
+      .getOrElse(lit(false))
+    df.withColumn(ErrorFlag, coalesce(errFlag, lit(false)))
+  }
+
+  /** Split a [[flag]]ged frame into the clean rows projected onto `target`
+    * and the flagged originals (plus `error_kind`).
+    */
+  def split(flagged: DataFrame, target: StructType): Resolved = {
+    val cols = projection(
+      StructType(flagged.schema.filterNot(_.name == ErrorFlag)), target)
+    val clean = flagged.filter(!col(ErrorFlag))
+      .select(target.fields.toSeq.zip(cols).map { case (tf, (v, _)) => v.as(tf.name) }: _*)
+    val bad = flagged.filter(col(ErrorFlag)).drop(ErrorFlag)
       .withColumn("error_kind", lit("schema_mismatch"))
     Resolved(clean, bad)
   }
+
+  /** Resolve `df` to `target`; rows where any value fails to convert go to
+    * `sidelined` (original columns + `error_kind`), the rest are projected
+    * clean. Extra input columns are dropped, missing target columns null.
+    */
+  def resolve(df: DataFrame, target: StructType): Resolved =
+    split(flag(df, target), target)
 }

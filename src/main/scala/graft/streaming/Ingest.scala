@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.lake.Lake
 import graft.schema.SchemaResolver
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -30,16 +30,27 @@ object Ingest {
     * lake, mismatches to the sideline (grouped by error_kind, reference
     * S17). Used by both the streaming sink and batch backfills — same
     * code, same layout.
+    *
+    * The batch is read once: the flagged frame is persisted for the span
+    * of the call (Spark's multiple-sink `foreachBatch` pattern), the lake
+    * append fills it and counts the mismatched rows on the way (an
+    * `observe` metric, no separate emptiness job), and the sideline write,
+    * run only when that count is non-zero, reads the cached rows. The
+    * cache is released in a `finally`, so nothing outlives the batch, a
+    * failed write included.
     */
   def processBatch(p: Pipeline)(batch: DataFrame, batchId: Long): Unit = {
-    val shaped = p.transform(batch)
-    val r = SchemaResolver.resolve(shaped, p.target)
-    Lake.append(r.resolved, p.lakePath)
-    val bad = r.sidelined
-    if (!bad.isEmpty) {
-      bad.withColumn("ts", coalesce(col("ts").cast("timestamp"), current_timestamp()))
-        .write.mode("append").partitionBy("error_kind").json(p.sidelinePath)
-    }
+    val flagged = SchemaResolver.flag(p.transform(batch), p.target).persist()
+    try {
+      val mismatched = Observation()
+      val counted = flagged.observe(mismatched,
+        count_if(col(SchemaResolver.ErrorFlag)).as("n"))
+      Lake.append(SchemaResolver.split(counted, p.target).resolved, p.lakePath)
+      if (mismatched.get("n") != 0L)
+        SchemaResolver.split(flagged, p.target).sidelined
+          .withColumn("ts", coalesce(col("ts").cast("timestamp"), current_timestamp()))
+          .write.mode("append").partitionBy("error_kind").json(p.sidelinePath)
+    } finally flagged.unpersist(blocking = true)
   }
 
   /** Start the ingest query over ANY streaming source — the queue-shaped

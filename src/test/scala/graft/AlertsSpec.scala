@@ -66,7 +66,7 @@ class AlertsSpec extends SparkSpec {
   test("retro-activation rewrites only partitions containing the alert") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lake").toString
+    val tmp = tempDir("graft_lake").toString
     // three hours of committed alert rows; alert "a1" spans hours 0 and 1,
     // alert "zz" lives alone in hour 2
     val rows = Seq(
@@ -99,7 +99,7 @@ class AlertsSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     import graft.lake.Snapshots
-    val tmp = java.nio.file.Files.createTempDirectory("graft_retro_e2e").toString
+    val tmp = tempDir("graft_retro_e2e").toString
     val cfg = AlertConfig(threshold = 2, windowSeconds = 1800)
     def m(id: Long, ts: String) =
       ("error_burst", "u1", id, java.sql.Timestamp.valueOf(ts))

@@ -519,13 +519,13 @@ class CurationSpec extends SparkSpec {
       .map(i => (i, if (i % 2 == 0) "en" else "fr", 100L + i))
       .toDF("doc_id", "lang", "n_chars")
     // identical cuts → identical editions → empty ledger
-    val t1 = java.nio.file.Files.createTempDirectory("rel_same").toString
+    val t1 = tempDir("rel_same").toString
     val same = Release.releaseDiffPipeline(spark, docs, "doc_id", "lang",
       "n_chars", cutA = 5000L, cutB = 5000L, budgetNum = 9L,
       budgetDen = 10L, epochCap = 1L, packBudget = 500L, baseDir = t1)
     assert(same.isEmpty, "identical editions must produce an empty ledger")
     // empty tier (cut 0 admits nothing) → every B pack is 'added'
-    val t2 = java.nio.file.Files.createTempDirectory("rel_empty").toString
+    val t2 = tempDir("rel_empty").toString
     val adds = Release.releaseDiffPipeline(spark, docs, "doc_id", "lang",
       "n_chars", cutA = 0L, cutB = 10000L, budgetNum = 9L,
       budgetDen = 10L, epochCap = 1L, packBudget = 500L, baseDir = t2)
@@ -536,7 +536,7 @@ class CurationSpec extends SparkSpec {
     assert(adds.length.toLong == bPacks)
     // budget > corpus capacity → every language saturates at its epoch
     // cap and the edition keeps its whole tier corpus
-    val t3 = java.nio.file.Files.createTempDirectory("rel_sat").toString
+    val t3 = tempDir("rel_sat").toString
     Release.buildEdition(spark, docs, "doc_id", "lang", "n_chars",
       cutBp = 10000L, budgetNum = 30L, budgetDen = 10L, epochCap = 1L,
       table = s"$t3/edition")

@@ -55,7 +55,7 @@ class EnrichmentYamlSpec extends SparkSpec {
   test("managed redirect shallow-merges with user keys winning (enrichment.ts:239)") {
     // an in-test managed base under the lower-cased type dir, so the
     // `managed.type: CISA_KEV` -> `cisa_kev/` lookup is exercised too
-    val managedRoot = Files.createTempDirectory("enrich_managed")
+    val managedRoot = tempDir("enrich_managed")
     Files.createDirectories(managedRoot.resolve("cisa_kev"))
     Files.writeString(managedRoot.resolve("cisa_kev/enrichment.yml"),
       """name: cisa_kev
@@ -65,7 +65,7 @@ class EnrichmentYamlSpec extends SparkSpec {
         |transform: |
         |  .vulnerability.id = del(.json.cveID)
         |""".stripMargin)
-    val dir = Files.createTempDirectory("enrich_user").toString
+    val dir = tempDir("enrich_user").toString
     Files.writeString(Paths.get(dir, "enrichment.yml"),
       """name: my_kev
         |managed:
@@ -113,21 +113,21 @@ class EnrichmentYamlSpec extends SparkSpec {
       c.read(spark, t).as[(String, String)].collect().toSet
 
     // overwrite: second sync fully replaces the first
-    val to = Files.createTempDirectory("enr_o").toString + "/t"
+    val to = tempDir("enr_o").toString + "/t"
     val co = conf("overwrite")
     co.sync(spark, to, df("a" -> "1", "b" -> "1"))
     co.sync(spark, to, df("c" -> "2"))
     assert(rowsOf(co, to) == Set("c" -> "2"))
 
     // append: both syncs' rows remain
-    val ta = Files.createTempDirectory("enr_a").toString + "/t"
+    val ta = tempDir("enr_a").toString + "/t"
     val ca = conf("append")
     ca.sync(spark, ta, df("a" -> "1"))
     ca.sync(spark, ta, df("b" -> "2"))
     assert(rowsOf(ca, ta) == Set("a" -> "1", "b" -> "2"))
 
     // merge: matched pk updates in place, new pk inserts
-    val tm = Files.createTempDirectory("enr_m").toString + "/t"
+    val tm = tempDir("enr_m").toString + "/t"
     val cm = conf("merge")
     cm.sync(spark, tm, df("a" -> "1", "b" -> "1"))
     cm.sync(spark, tm, df("b" -> "9", "c" -> "3"))
@@ -137,7 +137,7 @@ class EnrichmentYamlSpec extends SparkSpec {
   test("user_info config drives lookupJoin end-to-end from the real YAML") {
     assumeReference(exampleDir)
     val c = EnrichmentYaml.loadDir(s"$exampleDir/user_info")
-    val t = Files.createTempDirectory("enr_l").toString + "/t"
+    val t = tempDir("enr_l").toString + "/t"
     val users = Seq(("u1", "Alice"), ("u2", "Bob")).toDF("user_id", "name")
     c.sync(spark, t, users)
     val events = Seq(("e1", "u1"), ("e2", "u3")).toDF("event_id", "uid")

@@ -16,7 +16,7 @@ class FileStatsSpec extends SparkSpec {
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("stage collects footer stats; manifest round-trips them") {
-    val t = Files.createTempDirectory("stats_rt").toString
+    val t = tempDir("stats_rt").toString
     Seq(
       (1L, "alpha", 1.5, true, ts("2024-03-01 05:00:01")),
       (9L, "omega", -2.5, false, ts("2024-03-01 05:59:59")),
@@ -77,7 +77,7 @@ class FileStatsSpec extends SparkSpec {
   }
 
   test("readWhere skips files whose stats exclude the predicate") {
-    val t = Files.createTempDirectory("stats_skip").toString
+    val t = tempDir("stats_skip").toString
     // two commits = two disjoint id ranges in separate files, same hour
     Snapshots.append((1 to 100).map(i => (i.toLong, s"v$i", ts("2024-03-01 05:10:00")))
       .toDF("id", "name", "ts").coalesce(1), t)
@@ -99,7 +99,7 @@ class FileStatsSpec extends SparkSpec {
   }
 
   test("pre-stats manifest lines still read (no stats -> never pruned)") {
-    val t = Files.createTempDirectory("stats_compat").toString
+    val t = tempDir("stats_compat").toString
     Snapshots.append(Seq((1L, ts("2024-03-01 05:10:00"))).toDF("id", "ts"), t)
     // rewrite the manifest in the old 2-field format
     val meta = java.nio.file.Paths.get(t, "_graft_lake", "v000001.manifest")

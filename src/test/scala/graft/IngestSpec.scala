@@ -5,6 +5,9 @@ import java.nio.file.Files
 import graft.sources.{Compression, Framing}
 import graft.streaming.Ingest
 import graft.transform.managed.CloudTrail
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -37,7 +40,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("streaming ingest: landing json → transform → lake with sidelining") {
-    val tmp = Files.createTempDirectory("graft_ingest")
+    val tmp = tempDir("graft_ingest")
     val landing = tmp.resolve("landing").toString
     val lake = tmp.resolve("lake").toString
     val side = tmp.resolve("side").toString
@@ -71,7 +74,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("batch backfill ledger: re-runs are no-ops, new files process incrementally") {
-    val tmp = Files.createTempDirectory("graft_backfill")
+    val tmp = tempDir("graft_backfill")
     val landing = tmp.resolve("landing")
     Files.createDirectories(landing)
     val lake = tmp.resolve("lake").toString
@@ -109,7 +112,7 @@ class IngestSpec extends SparkSpec {
   test("queue-source ingest: identical pipeline from a non-file stream (S9 parity)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger
-    val tmp = Files.createTempDirectory("graft_qingest")
+    val tmp = tempDir("graft_qingest")
     val lake = tmp.resolve("lake").toString
     val side = tmp.resolve("side").toString
     val ckpt = tmp.resolve("ckpt").toString
@@ -150,7 +153,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("magic-byte inference decodes misnamed gzip next to plain text") {
-    val tmp = Files.createTempDirectory("graft_gz")
+    val tmp = tempDir("graft_gz")
     val gzPath = tmp.resolve("mislabeled.log") // gzip content, no .gz ext
     val bos = new java.io.ByteArrayOutputStream()
     val gz = new java.util.zip.GZIPOutputStream(bos)
@@ -163,7 +166,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("magic-byte inference decodes misnamed zstd via zstd-jni") {
-    val tmp = Files.createTempDirectory("graft_zst")
+    val tmp = tempDir("graft_zst")
     val bos = new java.io.ByteArrayOutputStream()
     val zs = new com.github.luben.zstd.ZstdOutputStream(bos)
     zs.write("zline-1\nzline-2\n".getBytes("UTF-8")); zs.close()
@@ -174,7 +177,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("openLines is lazy: first lines of a large gzip stream come without full decode") {
-    val tmp = Files.createTempDirectory("graft_lazy")
+    val tmp = tempDir("graft_lazy")
     val f = tmp.resolve("big.log")
     val gz = new java.util.zip.GZIPOutputStream(
       java.nio.file.Files.newOutputStream(f))
@@ -191,25 +194,23 @@ class IngestSpec extends SparkSpec {
   }
 
   test("metadata routing: key patterns route, skip, and default per object") {
-    val tmp = Files.createTempDirectory("graft_route")
-    try {
-      Files.write(tmp.resolve("acct_CloudTrail-Digest_x.json"), "d1\nd2\n".getBytes("UTF-8"))
-      Files.write(tmp.resolve("acct_CloudTrail-Insights_y.json"), "i1\n".getBytes("UTF-8"))
-      Files.write(tmp.resolve("acct_CloudTrail_z.json"), "r1\nr2\nr3\n".getBytes("UTF-8"))
-      Files.write(tmp.resolve("junk_manifest.checksum"), "x\n".getBytes("UTF-8"))
-      val routed = Framing.routeByFileMetadata(
-        spark.read.text(tmp.toString),
-        Seq(
-          Framing.MetadataRoute("checksum", None), // skip
-          Framing.MetadataRoute("Digest", Some("digest")),
-          Framing.MetadataRoute("Insights", Some("insights"))))
-      val counts = routed.groupBy("__table").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(counts == Map("digest" -> 2L, "insights" -> 1L, "default" -> 3L))
-      val tables = Framing.routedTables(routed, Seq("digest", "insights", "default"))
-      assert(tables("digest").count() == 2)
-      assert(tables("default").columns.toSeq == Seq("value"))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    val tmp = tempDir("graft_route")
+    Files.write(tmp.resolve("acct_CloudTrail-Digest_x.json"), "d1\nd2\n".getBytes("UTF-8"))
+    Files.write(tmp.resolve("acct_CloudTrail-Insights_y.json"), "i1\n".getBytes("UTF-8"))
+    Files.write(tmp.resolve("acct_CloudTrail_z.json"), "r1\nr2\nr3\n".getBytes("UTF-8"))
+    Files.write(tmp.resolve("junk_manifest.checksum"), "x\n".getBytes("UTF-8"))
+    val routed = Framing.routeByFileMetadata(
+      spark.read.text(tmp.toString),
+      Seq(
+        Framing.MetadataRoute("checksum", None), // skip
+        Framing.MetadataRoute("Digest", Some("digest")),
+        Framing.MetadataRoute("Insights", Some("insights"))))
+    val counts = routed.groupBy("__table").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(counts == Map("digest" -> 2L, "insights" -> 1L, "default" -> 3L))
+    val tables = Framing.routedTables(routed, Seq("digest", "insights", "default"))
+    assert(tables("digest").count() == 2)
+    assert(tables("default").columns.toSeq == Seq("value"))
   }
 
   test("streaming dedup within watermark drops re-delivered file ids") {
@@ -226,5 +227,119 @@ class IngestSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
     assert(spark.table("dedup_sink").count() == 2)
+  }
+
+  /** Counts the stages that run a file scan whose location contains
+    * `pathPart`. A scan node's task metrics ("number of output rows", …)
+    * are updated only by the tasks that execute it, so a read served from a
+    * cached copy of the scan's output does not count.
+    */
+  private final class ScanStages(pathPart: String) extends SparkListener {
+    private val scanMetrics = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    private def collect(p: SparkPlanInfo): Unit = {
+      if (p.nodeName.startsWith("Scan") &&
+          p.metadata.get("Location").exists(_.contains(pathPart)))
+        p.metrics.foreach(m => scanMetrics.add(m.accumulatorId))
+      p.children.foreach(collect)
+    }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => collect(s.sparkPlanInfo)
+      case u: SparkListenerSQLAdaptiveExecutionUpdate => collect(u.sparkPlanInfo)
+      case _ => ()
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      if (e.stageInfo.accumulables.keys.exists(id => scanMetrics.contains(id)))
+        stages.incrementAndGet()
+  }
+
+  /** A landing file of 60 JSON lines; every 7th carries a `user_id` that is
+    * not a number, so the batch sidelines rows.
+    */
+  private def singlePassFixture(name: String) = {
+    val tmp = tempDir(name)
+    val landing = tmp.resolve("landing_batch")
+    Files.createDirectories(landing)
+    Files.write(landing.resolve("part.json"), (0 until 60).map { i =>
+      val user = if (i % 7 == 3) "\"u-" + i + "\"" else "\"" + i + "\""
+      f"""{"ts":"2024-01-01T${i % 3 + 5}%02d:${i}%02d:00Z","event_type":"e${i % 4}","user_id":$user}"""
+    }.mkString("\n").getBytes("UTF-8"))
+    val landingSchema = StructType(Seq(
+      StructField("ts", StringType), StructField("event_type", StringType),
+      StructField("user_id", StringType)))
+    val target = StructType(Seq(
+      StructField("ts", TimestampType), StructField("event_type", StringType),
+      StructField("user_id", LongType)))
+    def pipeline(dir: String) = Ingest.Pipeline(
+      transform = df => df.withColumn("ts", to_timestamp(col("ts"))),
+      target = target, lakePath = tmp.resolve(dir).resolve("lake").toString,
+      sidelinePath = tmp.resolve(dir).resolve("side").toString)
+    (tmp, spark.read.schema(landingSchema).json(landing.toString), pipeline _)
+  }
+
+  private def persistentRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Wait for the async listener bus to deliver what is already posted. */
+  private def quiesce(n: => Int): Int = {
+    var last = -1
+    var tries = 0
+    while (n != last && tries < 25) { last = n; Thread.sleep(200); tries += 1 }
+    n
+  }
+
+  test("processBatch scans the landing file once, cache released after the batch") {
+    val (_, batch, pipeline) = singlePassFixture("graft_single_pass")
+    val p = pipeline("out")
+    val scans = new ScanStages("landing_batch")
+    val before = persistentRdds
+    spark.sparkContext.addSparkListener(scans)
+    try {
+      Ingest.processBatch(p)(batch, 0L)
+      assert(quiesce(scans.stages.get) == 1,
+        "the lake append, the mismatch check and the sideline write must share one scan")
+    } finally spark.sparkContext.removeSparkListener(scans)
+    assert(persistentRdds == before, "the batch's cache must not outlive the batch")
+    assert(graft.lake.Lake.read(spark, p.lakePath).count() == 51)
+    assert(spark.read.json(p.sidelinePath).count() == 9)
+  }
+
+  test("processBatch writes the same lake and sideline rows as the two-read form") {
+    import graft.lake.Lake
+    import graft.schema.SchemaResolver
+    val (_, batch, pipeline) = singlePassFixture("graft_single_pass_eq")
+    val p = pipeline("out")
+    Ingest.processBatch(p)(batch, 0L)
+    // reference: the per-output form, each write re-reading the batch
+    val ref = pipeline("ref")
+    val r = SchemaResolver.resolve(ref.transform(batch), ref.target)
+    Lake.append(r.resolved, ref.lakePath)
+    if (!r.sidelined.isEmpty)
+      r.sidelined.withColumn("ts", coalesce(col("ts").cast("timestamp"), current_timestamp()))
+        .write.mode("append").partitionBy("error_kind").json(ref.sidelinePath)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).sorted.toSeq
+    assert(rows(Lake.read(spark, p.lakePath)) == rows(Lake.read(spark, ref.lakePath)))
+    val side = spark.read.json(p.sidelinePath)
+    assert(side.columns.toSet == spark.read.json(ref.sidelinePath).columns.toSet)
+    assert(rows(side) == rows(spark.read.json(ref.sidelinePath)))
+    assert(rows(side).nonEmpty)
+  }
+
+  test("processBatch releases its cache when the sideline write fails") {
+    val (tmp, batch, pipeline) = singlePassFixture("graft_single_pass_fail")
+    val blocker = tmp.resolve("not_a_dir")
+    Files.write(blocker, "x".getBytes("UTF-8"))
+    val p = pipeline("out").copy(sidelinePath = blocker.toString)
+    val before = persistentRdds
+    intercept[Exception](Ingest.processBatch(p)(batch, 0L))
+    assert(persistentRdds == before, "a failed batch must not leave its cache behind")
+    assert(graft.lake.Lake.read(spark, p.lakePath).count() == 51)
+  }
+
+  test("processBatch on an empty batch returns and sidelines nothing") {
+    val (_, batch, pipeline) = singlePassFixture("graft_single_pass_empty")
+    val p = pipeline("out")
+    Ingest.processBatch(p)(batch.limit(0), 0L)
+    assert(!Files.exists(java.nio.file.Paths.get(p.sidelinePath)))
   }
 }

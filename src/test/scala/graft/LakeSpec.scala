@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.lake.Lake
 import graft.sources.Framing
 import graft.transform.TransformDsl
@@ -12,7 +10,7 @@ class LakeSpec extends SparkSpec {
   import spark.implicits._
 
   test("compactHour bin-packs one partition's files and preserves rows") {
-    val tmp = Files.createTempDirectory("graft_compact").toString
+    val tmp = tempDir("graft_compact").toString
     val rows = (1 to 500).map(i =>
       (i.toLong, java.sql.Timestamp.valueOf("2024-02-01 03:10:00")))
       .toDF("id", "ts")
@@ -48,7 +46,7 @@ class LakeSpec extends SparkSpec {
 
   test("evolveAppend: new columns appear, old rows read null, old columns null-fill") {
     import graft.lake.Lake
-    val dir = java.nio.file.Files.createTempDirectory("graft_evolve").toString
+    val dir = tempDir("graft_evolve").toString
     val v1 = Seq((1L, "a")).toDF("id", "name")
       .withColumn("ts", lit(java.sql.Timestamp.valueOf("2024-01-01 00:10:00")))
     Lake.append(v1, dir)
@@ -66,7 +64,7 @@ class LakeSpec extends SparkSpec {
   test("lake mergeUpsert: matched keys update in place, new keys insert") {
     import graft.lake.Lake
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge").toString
+    val dir = tempDir("graft_merge").toString
     val base = Seq(
       (1L, "old1", java.sql.Timestamp.valueOf("2024-01-01 00:10:00")),
       (2L, "old2", java.sql.Timestamp.valueOf("2024-01-01 01:10:00")),
@@ -92,7 +90,7 @@ class LakeSpec extends SparkSpec {
   test("lake mergeUpsert: an update whose ts re-derives another hour cannot nuke it") {
     import graft.lake.Lake
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge_mv").toString
+    val dir = tempDir("graft_merge_mv").toString
     Lake.append(Seq(
       (1L, "old1", java.sql.Timestamp.valueOf("2024-01-01 00:10:00")),
       (2L, "bystander", java.sql.Timestamp.valueOf("2024-01-01 02:10:00"))

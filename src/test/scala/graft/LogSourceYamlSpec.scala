@@ -151,7 +151,7 @@ class LogSourceYamlSpec extends SparkSpec {
   test("cloudtrail end-to-end: YAML-driven pipeline == hand-built pipeline, same rows") {
     assume(available)
     val src = LogSourceYaml.loadDir(s"$managedDir/aws_cloudtrail")
-    val tmp = Files.createTempDirectory("graft_yaml_e2e")
+    val tmp = tempDir("graft_yaml_e2e")
     val landing = tmp.resolve("landing")
     Files.createDirectories(landing)
     Files.writeString(landing.resolve("trail_123_us-east-1.json"),
@@ -244,7 +244,7 @@ class LogSourceYamlSpec extends SparkSpec {
     assume(available)
     val src = LogSourceYaml.loadDir(s"$managedDir/aws_s3inventory")
     val (routes, default) = src.metadataRouting.get
-    val tmp = Files.createTempDirectory("graft_s3inv")
+    val tmp = tempDir("graft_s3inv")
     Files.writeString(tmp.resolve("inv_1.csv.gz.json"), "a,b\n")
     Files.writeString(tmp.resolve("inv_2.parquet.json"), "c,d\n")
     val routed = Framing.routeByFileMetadata(
@@ -347,7 +347,7 @@ class LogSourceYamlSpec extends SparkSpec {
 
     // --- routing straight from the real select_table_from_payload_metadata
     val (routes, default) = src.metadataRouting.get
-    val tmp = Files.createTempDirectory("graft_zeek_e2e")
+    val tmp = tempDir("graft_zeek_e2e")
     val landing = tmp.resolve("landing")
     Files.createDirectories(landing)
     val dnsLine =

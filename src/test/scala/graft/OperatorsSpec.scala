@@ -643,6 +643,51 @@ class OperatorsSpec extends SparkSpec {
     assert(out.columns.contains("rule_name") && out.columns.contains("deduplication_window"))
   }
 
+  test("ruleMatches: one-scan pack equals the per-rule union on every pack shape") {
+    import graft.operators.Detection
+    import graft.operators.Detection.{ImperativeRule, SimpleRule}
+    import java.sql.Timestamp
+    val events = Seq(
+      (1L, Timestamp.valueOf("2024-01-01 00:00:00"), "alice", Some(5L), "login"),
+      (2L, Timestamp.valueOf("2024-01-01 00:01:00"), "bob", None, "login"),
+      (3L, Timestamp.valueOf("2024-01-01 00:02:00"), "alice", Some(9L), "delete"),
+      (4L, Timestamp.valueOf("2024-01-01 00:03:00"), "carol", Some(1L), "view"),
+      (5L, Timestamp.valueOf("2024-01-01 00:04:00"), null, None, "delete"))
+      .toDF("event_id", "ts", "user", "n", "action")
+    val login = SimpleRule("login", col("action") === "login", dedupe = col("user"),
+      severity = "info", threshold = 2, windowSeconds = 600)
+    val big = SimpleRule("big_n", col("n") > 4, dedupe = col("n")) // null n → null
+    val alice = SimpleRule("alice", col("user") === "alice", severity = "high")
+    val deletes = SimpleRule("dup", col("action") === "delete", dedupe = col("user"))
+    val views = SimpleRule("dup", col("action") === "view" || col("n") > 8)
+    val typed = ImperativeRule("typed_delete",
+      row => row.getAs[String]("action") == "delete", dedupe = col("event_id"))
+    val packs = Seq(
+      "overlapping rules" -> Seq(login, big, alice),
+      "null-yielding predicate" -> Seq(big, SimpleRule("n_null", col("n").isNull)),
+      "duplicate rule names" -> Seq(deletes, views, alice),
+      "per-rule dedupe columns" -> Seq(login, big, deletes),
+      "imperative and declarative mixed" -> Seq(typed, login, big, alice),
+      "imperative only" -> Seq(typed),
+      "single rule" -> Seq(big))
+    def multiset(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.length }
+    for ((name, rules) <- packs) {
+      val got = Detection.ruleMatches(events, rules, matchId = col("event_id"))
+      val want = UnionRuleMatches(events, rules, matchId = col("event_id"))
+      assert(got.schema == want.schema, name)
+      assert(multiset(got) == multiset(want), name)
+    }
+    // an event matching k rules yields k rows
+    val overlap = Detection.ruleMatches(events, Seq(login, big, alice), col("event_id"))
+    assert(overlap.filter(col("match_id") === 1L).count() == 3)
+    // zero rules: no rows, the match schema
+    val none = Detection.ruleMatches(events, Seq.empty, matchId = col("event_id"))
+    assert(none.count() == 0)
+    assert(none.schema.fieldNames.toSeq == UnionRuleMatches(events, Seq(login),
+      col("event_id")).schema.fieldNames.toSeq)
+  }
+
   test("brute-force top-k returns self-similar vectors first") {
     val mk = (s: Double) => Seq(1.0 * s, 2.0 * s, 3.0 * s)
     val corpus = Seq((10L, mk(2)), (11L, Seq(3.0, -1.0, 0.5)), (12L, mk(-1)))

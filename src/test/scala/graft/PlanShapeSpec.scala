@@ -89,8 +89,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("bucketed co-located join plans with ZERO exchanges (q131 shape)") {
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_bucketed_spec").toString
+    val base = tempDir("graft_bucketed_spec").toString
     val ev = spark.range(0, 10000).select(
       col("id").as("event_id"), pmod(col("id"), lit(97)).as("user_id"))
     val prof = ev.groupBy("user_id").agg(count(lit(1)).as("n"))
@@ -118,6 +117,30 @@ class PlanShapeSpec extends SparkSpec {
     assert(joined.count() == 10000)
     spark.sql("DROP TABLE graft_spec_b_ev")
     spark.sql("DROP TABLE graft_spec_b_u")
+  }
+
+  test("a declarative rule pack plans one parquet scan, its OR pushed down") {
+    import graft.operators.Detection
+    import graft.operators.Detection.SimpleRule
+    import org.apache.spark.sql.functions._
+    val dir = tempDir("graft_rule_pack").resolve("events").toString
+    spark.range(0, 1000).select(col("id").as("event_id"),
+        (col("id") % 7).as("kind"), (col("id") % 13).as("n"),
+        timestamp_seconds(col("id")).as("ts"))
+      .write.parquet(dir)
+    val events = spark.read.parquet(dir)
+    val rules = Seq(
+      SimpleRule("kind3", col("kind") === 3),
+      SimpleRule("n_big", col("n") > 10),
+      SimpleRule("id_low", col("event_id") < 20, dedupe = col("kind")))
+    def scans(df: DataFrame): Seq[FileSourceScanExec] =
+      df.queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
+    val pack = scans(Detection.ruleMatches(events, rules, col("event_id")))
+    assert(pack.size == 1, s"expected one scan for ${rules.size} rules, got ${pack.size}")
+    assert(pack.head.metadata("PushedFilters").contains("Or("),
+      s"the rules' OR should reach the parquet reader: ${pack.head.metadata("PushedFilters")}")
+    // the per-rule union this replaced plans a scan per rule
+    assert(scans(UnionRuleMatches(events, rules, col("event_id"))).size == rules.size)
   }
 
   test("guard has teeth: the round-5 defect shape (plain explode over a " +

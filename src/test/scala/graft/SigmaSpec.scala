@@ -575,7 +575,7 @@ class SigmaSpec extends SparkSpec {
   }
 
   test("rule pack surfaces legacy embedded correlations") {
-    val dir = java.nio.file.Files.createTempDirectory("sigma_pack2")
+    val dir = tempDir("sigma_pack2")
     java.nio.file.Files.writeString(dir.resolve("legacy.yml"),
       """title: brute
         |detection:
@@ -620,7 +620,7 @@ class SigmaSpec extends SparkSpec {
     // is batch/stream parity on the same events (the q40/q41 contract)
     import graft.operators.Alerts
     import graft.streaming.AlertStream
-    val dir = java.nio.file.Files.createTempDirectory("sigma_stream").toString
+    val dir = tempDir("sigma_stream").toString
     val ev = (1 to 40).map(i =>
         (i.toLong, if (i % 4 == 0) "error" else "view", i.toLong % 5,
           java.sql.Timestamp.valueOf(f"2024-01-01 00:${i % 60}%02d:00")))
@@ -654,7 +654,7 @@ class SigmaSpec extends SparkSpec {
   }
 
   test("rule-pack directory loads rules + correlations; bad files are named") {
-    val dir = java.nio.file.Files.createTempDirectory("sigma_pack")
+    val dir = tempDir("sigma_pack")
     val sub = java.nio.file.Files.createDirectory(dir.resolve("aws"))
     java.nio.file.Files.writeString(sub.resolve("a_rules.yml"),
       """title: one
@@ -993,7 +993,7 @@ class SigmaSpec extends SparkSpec {
     assert(matchedIds(ev, rules(0).detect) == Set(1L, 2L))
     assert(matchedIds(ev, rules(1).detect) == Set(5L))
     // same through the rule-pack path
-    val dir = java.nio.file.Files.createTempDirectory("sigma_pack3")
+    val dir = tempDir("sigma_pack3")
     java.nio.file.Files.writeString(dir.resolve("r.yml"),
       """title: blocky
         |description: |
@@ -1027,7 +1027,7 @@ class SigmaSpec extends SparkSpec {
       dnsLine(3, "example.com"), dnsLine(4, "ONION.TO"))
       .toDF("json"))
       .withColumn("id", expr("cast(substring(event.id, 2) as long)"))
-    val dir = java.nio.file.Files.createTempDirectory("sigma_zeek")
+    val dir = tempDir("sigma_zeek")
     java.nio.file.Files.writeString(dir.resolve("zeek_dns_torproxy.yml"),
       """title: DNS TOR Proxies
         |id: a8322756-015c-42e7-afb1-436e85ed3ff5
@@ -1074,7 +1074,7 @@ class SigmaSpec extends SparkSpec {
       oktaLine(3, "user.session.start"), oktaLine(4, "policy.rule.deactivate"))
       .toDF("json"))
       .withColumn("id", expr("cast(substring(okta.uuid, 2) as long)"))
-    val dir = java.nio.file.Files.createTempDirectory("sigma_okta")
+    val dir = tempDir("sigma_okta")
     java.nio.file.Files.writeString(dir.resolve("okta_policy_rule_modified_or_deleted.yml"),
       """title: Okta Policy Rule Modified or Deleted
         |status: test
@@ -1144,7 +1144,7 @@ class SigmaSpec extends SparkSpec {
       gcpLine(4, "storage.setIamPermissions"))
       .toDF("json"))
       .withColumn("id", expr("cast(substring(event.id, 2) as long)"))
-    val dir = java.nio.file.Files.createTempDirectory("sigma_gcp")
+    val dir = tempDir("sigma_gcp")
     java.nio.file.Files.writeString(dir.resolve("gcp_bucket_modified_or_deleted.yml"),
       """title: GCP Bucket Modified or Deleted
         |status: test
@@ -1195,7 +1195,7 @@ class SigmaSpec extends SparkSpec {
       signinLine(3, "failure", "atRisk"), signinLine(4, "notApplied", "none"))
       .toDF("json"))
       .withColumn("id", expr("cast(substring(event.id, 2) as long)"))
-    val dirS = java.nio.file.Files.createTempDirectory("sigma_aad_signin")
+    val dirS = tempDir("sigma_aad_signin")
     java.nio.file.Files.writeString(
       dirS.resolve("azure_conditional_access_failure.yml"),
       """title: Sign-In Denied by Conditional Access
@@ -1236,7 +1236,7 @@ class SigmaSpec extends SparkSpec {
       auditLine(4, "Add member to role", "Add"))
       .toDF("json"))
       .withColumn("id", expr("cast(substring(event.id, 2) as long)"))
-    val dirA = java.nio.file.Files.createTempDirectory("sigma_aad_audit")
+    val dirA = tempDir("sigma_aad_audit")
     java.nio.file.Files.writeString(
       dirA.resolve("azure_role_member_added.yml"),
       """title: Member Added to Privileged Role
@@ -1297,7 +1297,7 @@ class SigmaSpec extends SparkSpec {
       ghLine(4, "git.clone"))
       .toDF("json"))
       .withColumn("id", expr("cast(substring(event.id, 2) as long)"))
-    val dir = java.nio.file.Files.createTempDirectory("sigma_github")
+    val dir = tempDir("sigma_github")
     java.nio.file.Files.writeString(dir.resolve("github_delete_action_invoked.yml"),
       """title: Github Delete Action Invoked
         |status: test
@@ -1348,7 +1348,7 @@ class SigmaSpec extends SparkSpec {
       ual(4, "AzureActiveDirectory", "Set domain authentication."))
       .toDF("json"))
       .withColumn("id", expr("cast(substring(event.id, 2) as long)"))
-    val dir = java.nio.file.Files.createTempDirectory("sigma_o365")
+    val dir = tempDir("sigma_o365")
     java.nio.file.Files.writeString(
       dir.resolve("m365_new_federated_domain_added.yml"),
       """title: New Federated Domain Added
@@ -1393,7 +1393,7 @@ class SigmaSpec extends SparkSpec {
       falcon(4, "AuthActivityAuditEvent", "twoFactorAuthenticate"))
       .toDF("json"))
       .withColumn("id", col("crowdstrike.metadata.offset"))
-    val dir = java.nio.file.Files.createTempDirectory("sigma_falcon")
+    val dir = tempDir("sigma_falcon")
     java.nio.file.Files.writeString(dir.resolve("falcon_2fa_denied.yml"),
       """title: Two-Factor Authentication Attempt
         |status: test
@@ -1442,7 +1442,7 @@ class SigmaSpec extends SparkSpec {
       eve(4, "alert", "ET EXPLOIT Shellcode Detected"))
       .toDF("json"))
       .withColumn("id", expr("cast(suricata.eve.flow_id as long)"))
-    val dir = java.nio.file.Files.createTempDirectory("sigma_suricata")
+    val dir = tempDir("sigma_suricata")
     java.nio.file.Files.writeString(dir.resolve("suricata_et_exploit.yml"),
       """title: Suricata ET EXPLOIT Alert
         |status: test

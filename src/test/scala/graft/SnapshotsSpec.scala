@@ -17,7 +17,7 @@ class SnapshotsSpec extends SparkSpec {
     ids.map(i => (i.toLong, s"v$i", ts(s"$hour:10:00"))).toDF("id", "name", "ts")
 
   test("append commits advance the version; reads see committed state") {
-    val t = Files.createTempDirectory("snap_append").toString
+    val t = tempDir("snap_append").toString
     assert(Snapshots.currentVersion(t).isEmpty)
     val v1 = Snapshots.append(mkRows(1 to 10, "2024-03-01 05"), t)
     assert(v1 == 1)
@@ -29,7 +29,7 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("a reader pinned to snapshot N stays consistent while N+1 commits") {
-    val t = Files.createTempDirectory("snap_pin").toString
+    val t = tempDir("snap_pin").toString
     Snapshots.append(mkRows(1 to 100, "2024-03-01 05"), t)
     val pinnedVersion = Snapshots.currentVersion(t).get
     val pinned = Snapshots.read(spark, t, version = Some(pinnedVersion))
@@ -43,7 +43,7 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("overwritePartitions replaces only staged hours") {
-    val t = Files.createTempDirectory("snap_ow").toString
+    val t = tempDir("snap_ow").toString
     Snapshots.append(mkRows(1 to 10, "2024-03-01 05"), t)
     Snapshots.append(mkRows(11 to 20, "2024-03-01 06"), t)
     Snapshots.overwritePartitions(mkRows(21 to 22, "2024-03-01 05"), t)
@@ -55,7 +55,7 @@ class SnapshotsSpec extends SparkSpec {
   test("bucket-partitioned index layout: a probe reads only its buckets' files") {
     // the q143 IVF-on-lake shape: PartitionCol carries the bucket, so a
     // probed read plans ONLY the probed buckets' files off the manifest
-    val t = Files.createTempDirectory("snap_bucket").toString
+    val t = tempDir("snap_bucket").toString
     val rows = (1 to 40).map(i => (i.toLong, s"v$i", s"b${i % 4}"))
       .toDF("id", "name", Lake.PartitionCol)
     Snapshots.append(rows, t)
@@ -72,7 +72,7 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("schema evolution: appends with new columns union-evolve the manifest schema") {
-    val t = Files.createTempDirectory("snap_evo").toString
+    val t = tempDir("snap_evo").toString
     Snapshots.append(mkRows(1 to 5, "2024-03-01 05"), t)
     // second commit adds `score`, drops nothing — the evolveAppend shape
     val withScore = (6 to 8).map(i => (i.toLong, s"v$i", ts("2024-03-01 06:10:00"), i * 1.5))
@@ -87,7 +87,7 @@ class SnapshotsSpec extends SparkSpec {
     // a reader pinned to v1 still sees v1's schema — no `score`
     assert(!Snapshots.read(spark, t, version = Some(1)).columns.contains("score"))
     // and matches what Lake.evolveAppend produces for the same sequence
-    val lakeDir = Files.createTempDirectory("snap_evo_lake").toString
+    val lakeDir = tempDir("snap_evo_lake").toString
     Lake.evolveAppend(spark, mkRows(1 to 5, "2024-03-01 05"), lakeDir)
     Lake.evolveAppend(spark, withScore, lakeDir)
     val viaLake = Lake.readEvolved(spark, lakeDir)
@@ -97,7 +97,7 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("schema evolution survives overwrite and a subset-column append") {
-    val t = Files.createTempDirectory("snap_evo2").toString
+    val t = tempDir("snap_evo2").toString
     Snapshots.append(mkRows(1 to 4, "2024-03-01 05"), t)
     Snapshots.append((5 to 6).map(i => (i.toLong, s"v$i", ts("2024-03-01 06:10:00"), i * 1.0))
       .toDF("id", "name", "ts", "score"), t)
@@ -113,9 +113,9 @@ class SnapshotsSpec extends SparkSpec {
     import org.apache.spark.sql.sources.EqualTo
     def ids = new scala.util.Random(7).shuffle((1 to 4000).toList)
       .map(i => (i.toLong, s"v$i", ts("2024-03-01 05:10:00")))
-    val spread = Files.createTempDirectory("snap_unclustered").toString
+    val spread = tempDir("snap_unclustered").toString
     Snapshots.append(ids.toDF("id", "name", "ts").repartition(8), spread)
-    val tight = Files.createTempDirectory("snap_clustered").toString
+    val tight = tempDir("snap_clustered").toString
     Snapshots.append(ids.toDF("id", "name", "ts").repartition(8), tight,
       clusterBy = Seq("id"))
     def filesKept(t: String): Int = {
@@ -137,7 +137,7 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("readAsOf: timestamp time travel picks the newest snapshot at-or-before") {
-    val t = Files.createTempDirectory("snap_asof").toString
+    val t = tempDir("snap_asof").toString
     Snapshots.append(mkRows(1 to 10, "2024-03-01 05"), t)
     val afterV1 = System.currentTimeMillis()
     Thread.sleep(5) // ensure v2's commit-time is strictly later
@@ -150,7 +150,7 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("readAsOf keeps working over the retained window after expireSnapshots") {
-    val t = Files.createTempDirectory("snap_asof_exp").toString
+    val t = tempDir("snap_asof_exp").toString
     Snapshots.append(mkRows(1 to 10, "2024-03-01 05"), t)
     Thread.sleep(5)
     Snapshots.append(mkRows(11 to 20, "2024-03-01 06"), t)
@@ -168,7 +168,7 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("schema evolution rejects a type-conflicting reuse of a column name") {
-    val t = Files.createTempDirectory("snap_evo_conflict").toString
+    val t = tempDir("snap_evo_conflict").toString
     Snapshots.append(mkRows(1 to 3, "2024-03-01 05"), t) // name: string
     val conflicting = (4 to 5).map(i => (i.toLong, i * 2, ts("2024-03-01 06:10:00")))
       .toDF("id", "name", "ts") // name: int — incompatible with string
@@ -183,7 +183,7 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("history: one row per retained manifest with rollups") {
-    val t = Files.createTempDirectory("snap_hist").toString
+    val t = tempDir("snap_hist").toString
     Snapshots.append(mkRows(1 to 10, "2024-03-01 05"), t)
     Snapshots.append((11 to 12).map(i => (i.toLong, s"v$i", ts("2024-03-01 06:10:00"), 1.0))
       .toDF("id", "name", "ts", "extra"), t)
@@ -197,7 +197,7 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("pre-schema manifests (no #schema header) still read via footer inference") {
-    val t = Files.createTempDirectory("snap_preschema").toString
+    val t = tempDir("snap_preschema").toString
     Snapshots.append(mkRows(1 to 6, "2024-03-01 05"), t)
     // strip the schema header from the manifest, simulating an old table
     val mf = Files.list(Paths.get(t, "_graft_lake")).iterator().next()
@@ -210,7 +210,7 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("mergeUpsert: one atomic commit updates matched rows, inserts the rest") {
-    val t = Files.createTempDirectory("snap_merge").toString
+    val t = tempDir("snap_merge").toString
     Snapshots.append(mkRows(1 to 10, "2024-03-01 05"), t)
     Snapshots.append(mkRows(11 to 20, "2024-03-01 06"), t)
     val before = Snapshots.currentVersion(t).get
@@ -232,7 +232,7 @@ class SnapshotsSpec extends SparkSpec {
   test("mergeUpsert: an Int-typed update pk against a Long lake pk is " +
       "rejected loudly BEFORE any staging I/O (driver-side pk == is only " +
       "sound under identical types)") {
-    val t = Files.createTempDirectory("snap_pk_type").toString
+    val t = tempDir("snap_pk_type").toString
     Snapshots.append(mkRows(1 to 10, "2024-03-01 05"), t)
     val before = Snapshots.currentVersion(t).get
     // update pk column is INT — the Spark join would coerce it against
@@ -269,7 +269,7 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("mergeUpsert: insert-only updates (no key matches) append cleanly") {
-    val t = Files.createTempDirectory("snap_insert_only").toString
+    val t = tempDir("snap_insert_only").toString
     Snapshots.append(mkRows(1 to 10, "2024-03-01 05"), t)
     val fresh = Seq((100L, "n100", ts("2024-03-01 08:10:00")),
       (101L, "n101", ts("2024-03-01 08:10:00"))).toDF("id", "name", "ts")
@@ -278,7 +278,7 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("mergeUpsert rejects duplicate primary keys in updates") {
-    val t = Files.createTempDirectory("snap_dup").toString
+    val t = tempDir("snap_dup").toString
     Snapshots.append(mkRows(1 to 5, "2024-03-01 05"), t)
     val dup = Seq((1L, "a", ts("2024-03-01 05:10:00")),
       (1L, "b", ts("2024-03-01 05:10:00"))).toDF("id", "name", "ts")
@@ -287,7 +287,7 @@ class SnapshotsSpec extends SparkSpec {
     }
     // both merge entry points share the cardinality guard — Lake.mergeUpsert
     // must reject the same bad input rather than multiplying matched rows
-    val t2 = Files.createTempDirectory("lake_dup").toString
+    val t2 = tempDir("lake_dup").toString
     Lake.append(mkRows(1 to 5, "2024-03-01 05"), t2)
     intercept[IllegalArgumentException] {
       Lake.mergeUpsert(spark, t2, dup, "id")
@@ -295,7 +295,7 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("compactHour preserves rows and commits atomically") {
-    val t = Files.createTempDirectory("snap_compact").toString
+    val t = tempDir("snap_compact").toString
     (0 until 5).foreach(i => Snapshots.append(
       mkRows(i * 10 + 1 to i * 10 + 10, "2024-03-01 05"), t))
     val filesBefore = Snapshots.current(t).get.entries.size
@@ -308,7 +308,7 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("expireSnapshots drops old manifests + their exclusive files, keeps staged orphans") {
-    val t = Files.createTempDirectory("snap_expire").toString
+    val t = tempDir("snap_expire").toString
     Snapshots.append(mkRows(1 to 10, "2024-03-01 05"), t)
     Snapshots.overwritePartitions(mkRows(1 to 3, "2024-03-01 05"), t) // v2 replaces v1 files
     Snapshots.append(mkRows(11 to 12, "2024-03-01 06"), t)            // v3
@@ -334,7 +334,7 @@ class SnapshotsSpec extends SparkSpec {
 
   test("RefreshingTable over a snapshot table survives destructive rewrite") {
     import graft.operators.Enrichment
-    val t = Files.createTempDirectory("snap_refresh").toString
+    val t = tempDir("snap_refresh").toString
     Snapshots.append(mkRows(1 to 50, "2024-03-01 05"), t)
     // staleness=1h: the handle pins the current snapshot for the test's life
     val handle = new Enrichment.RefreshingTable(t, stalenessMs = 3600000L)
@@ -352,7 +352,7 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("compactSmallFiles bin-packs fragmented hours in one commit; pinned readers unaffected") {
-    val t = Files.createTempDirectory("snap_compact").toString
+    val t = tempDir("snap_compact").toString
     // six micro-batch appends, each touching the same two hours — the
     // streaming small-file debt shape (≥1 file per hour per commit)
     for (b <- 0 until 6)
@@ -401,8 +401,8 @@ class SnapshotsSpec extends SparkSpec {
     val grid = spark.range(0, 4096).select(
       (col("id") % 64).as("x"), (col("id") / 64).cast("long").as("y"),
       lit(ts("2024-03-01 05:10:00")).as("ts"))
-    val zt = Files.createTempDirectory("snap_zorder").toString
-    val lt = Files.createTempDirectory("snap_linear").toString
+    val zt = tempDir("snap_zorder").toString
+    val lt = tempDir("snap_linear").toString
     Snapshots.append(grid.withColumn("__zk", Lake.zorderKey(col("x"), col("y"), 6)),
       zt, clusterBy = Seq("__zk"), clusterPartitions = Some(64))
     Snapshots.append(grid, lt, clusterBy = Seq("x"), clusterPartitions = Some(64))
@@ -434,7 +434,7 @@ class SnapshotsSpec extends SparkSpec {
   test("readKeyProbe: a point-key probe against a key-clustered table " +
       "reads ≤2 files per probed key, returns every matching row, and an " +
       "empty probe reads nothing but keeps the schema") {
-    val t = Files.createTempDirectory("snap_keyprobe").toString
+    val t = tempDir("snap_keyprobe").toString
     // 8 range-disjoint sorted files over keys 0..7999
     Snapshots.append(keyRows(0 until 8000), t,
       clusterBy = Seq("k"), clusterPartitions = Some(8))
@@ -457,7 +457,7 @@ class SnapshotsSpec extends SparkSpec {
 
   test("readKeyProbe: files without usable key stats are always kept — " +
       "pruning never drops a blind file") {
-    val t = Files.createTempDirectory("snap_keyprobe_blind").toString
+    val t = tempDir("snap_keyprobe_blind").toString
     // a string-keyed column under the probe's long-typed contract: stats
     // exist but with typ 's', so every file is probe-blind
     val rows = (0 until 100).map(i => (s"s$i", ts("2024-01-01 00:10:00")))
@@ -472,7 +472,7 @@ class SnapshotsSpec extends SparkSpec {
   test("recluster: per-commit runs overlap in key range (probe keeps all " +
       "files) until one atomic recluster restores disjoint ranges — rows " +
       "identical before and after") {
-    val t = Files.createTempDirectory("snap_recluster").toString
+    val t = tempDir("snap_recluster").toString
     // three commits, each clustered internally into 4 files — but every
     // commit spans the full key range, so a point key touches one file
     // PER COMMIT
@@ -505,7 +505,7 @@ class SnapshotsSpec extends SparkSpec {
 
   test("mergeUpsert clusterBy: insert-only merge commits stage key-" +
       "clustered files, so the registry stays probe-prunable as it grows") {
-    val t = Files.createTempDirectory("snap_merge_cluster").toString
+    val t = tempDir("snap_merge_cluster").toString
     Snapshots.append(keyRows(0 until 4000), t,
       clusterBy = Seq("k"), clusterPartitions = Some(4))
     // big-path merge (above the small-merge threshold) of fresh keys only
@@ -533,7 +533,7 @@ class SnapshotsSpec extends SparkSpec {
   test("reclusterIfFragmented: no-op on a freshly clustered table, fires " +
       "after interleaved per-commit runs accrue, restores probe pruning, " +
       "and the next scheduled call no-ops again") {
-    val t = Files.createTempDirectory("snap_autoreclus").toString
+    val t = tempDir("snap_autoreclus").toString
     Snapshots.append(keyRows(0 until 4000), t,
       clusterBy = Seq("k"), clusterPartitions = Some(4))
     // one clustered commit: ranges disjoint, overlap 0 → scheduled run

@@ -92,7 +92,7 @@ class StreamingSpec extends SparkSpec {
     def twin(seed: Int): Array[Byte] = {
       val b = img(seed).clone(); b(w * w - 1) = 0; b
     }
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_dedup_idx").toString
+    val idxDir = tempDir("graft_dedup_idx").toString
     def hash(rows: Seq[(Long, Array[Byte])]) =
       Multimodal.aHash(spark, rows.toDF("doc_id", "payload").withColumn("w", lit(w)),
         "doc_id", "payload", "w")
@@ -133,7 +133,7 @@ class StreamingSpec extends SparkSpec {
 
   test("LSH text dedup index grows across batches: intra-batch order, cross-batch suppression, idempotent replay") {
     import graft.streaming.DedupIndex
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_lsh_idx").toString
+    val idxDir = tempDir("graft_lsh_idx").toString
     def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
     def fold(rows: (Long, String)*) =
       DedupIndex.lshDedupBatch(spark, idxDir, batch(rows: _*))
@@ -165,7 +165,7 @@ class StreamingSpec extends SparkSpec {
       "normalization, idempotent replay") {
     import graft.streaming.DedupIndex
     val idxDir =
-      java.nio.file.Files.createTempDirectory("graft_para_idx").toString
+      tempDir("graft_para_idx").toString
     def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
     def fold(rows: (Long, String)*) =
       DedupIndex.paragraphDedupBatch(spark, idxDir, batch(rows: _*))
@@ -199,7 +199,7 @@ class StreamingSpec extends SparkSpec {
       "their coverage, idempotent replay") {
     import graft.streaming.DedupIndex
     val idxDir =
-      java.nio.file.Files.createTempDirectory("graft_span_idx").toString
+      tempDir("graft_span_idx").toString
     def fold(rows: (Long, String)*) =
       DedupIndex.spanDedupBatch(spark, idxDir, rows.toDF("doc_id", "text"))
         .collect().map(r => r.getAs[Long]("doc_id") ->
@@ -256,7 +256,7 @@ class StreamingSpec extends SparkSpec {
       Sampling.unimaxAllocate(df, "lang", "n_chars", 9L, 10L, 1L)
         .collect().map(r => (r.getString(0), r.getLong(3))).toList.sorted
     def foldOver(cuts: Seq[org.apache.spark.sql.Column]) = {
-      val t = java.nio.file.Files.createTempDirectory("unimax_fold").toString
+      val t = tempDir("unimax_fold").toString
       var last: List[(String, Long)] = Nil
       cuts.zipWithIndex.foreach { case (cut, i) =>
         val out = AllocationFold.unimaxBatch(spark, s"$t/reg",
@@ -276,7 +276,7 @@ class StreamingSpec extends SparkSpec {
       "fold must equal the one-shot allocation for any batching")
     // mid-fold check: after batch 1 of the halves fold the allocation
     // equals the one-shot over that prefix alone
-    val tMid = java.nio.file.Files.createTempDirectory("unimax_mid").toString
+    val tMid = tempDir("unimax_mid").toString
     val mid = AllocationFold.unimaxBatch(spark, s"$tMid/reg",
         rows.filter(col("doc_id") <= 40), "b0", "lang", "n_chars",
         9L, 10L, 1L)
@@ -299,7 +299,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.DedupIndex
     import graft.lake.Snapshots
     val idxDir =
-      java.nio.file.Files.createTempDirectory("graft_lsh_probe").toString
+      tempDir("graft_lsh_probe").toString
     def alpha(i: Long): String = java.lang.Long.toString(i, 26)
       .map(c => if (c.isDigit) ('a' + (c - '0')).toChar else (c + 10).toChar)
     def doc(i: Long): (Long, String) =
@@ -345,7 +345,7 @@ class StreamingSpec extends SparkSpec {
           r.getAs[String]("boundaries_csv")))).toMap
     def foldOver(cuts: Seq[org.apache.spark.sql.Column]): (String,
         Map[(String, Long), (Long, Long, String)]) = {
-      val t = java.nio.file.Files.createTempDirectory("pack_fold").toString
+      val t = tempDir("pack_fold").toString
       cuts.zipWithIndex.foreach { case (cut, i) =>
         PackFold.packBatch(spark, s"$t/reg", s"$t/contrib",
           rows.filter(cut), s"b$i", "doc_id", "lang", "n_tokens", 100L)
@@ -396,7 +396,7 @@ class StreamingSpec extends SparkSpec {
       Sampling.unimaxTake(df, "doc_id", "lang", "n_chars", a)
         .collect().map(_.getLong(1)).toSet
     }
-    val t = java.nio.file.Files.createTempDirectory("take_fold").toString
+    val t = tempDir("take_fold").toString
     def fold(cut: org.apache.spark.sql.Column): Set[Long] =
       AllocationFold.unimaxTakeBatch(spark, s"$t/reg", rows.filter(cut),
         "doc_id", "lang", "n_chars", 1L, 2L, 1L)
@@ -424,7 +424,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.DedupIndex
     import graft.lake.Snapshots
     val idxDir =
-      java.nio.file.Files.createTempDirectory("graft_span_probe").toString
+      tempDir("graft_span_probe").toString
     // a large first batch: 600 unique docs × 2 span keys each register
     // 1200 uniform int64 keys
     def doc(i: Long) = i -> s"aa$i bb$i. cc$i dd$i. ee$i ff$i. gg$i hh$i."
@@ -456,7 +456,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.DedupIndex
     import graft.lake.Snapshots
     val idxDir =
-      java.nio.file.Files.createTempDirectory("graft_para_probe").toString
+      tempDir("graft_para_probe").toString
     // paragraph keys DIGIT-NORMALIZE (the CCNet recipe), so distinct
     // paragraphs must differ in letters: base-26 alpha ids
     def alpha(i: Long): String = java.lang.Long.toString(i, 26)
@@ -976,7 +976,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming enrichment refresh: an update is visible to the next batch") {
     import graft.operators.Enrichment
-    val dir = java.nio.file.Files.createTempDirectory("graft_enrich").toString
+    val dir = tempDir("graft_enrich").toString
     Seq(("u1", "low")).toDF("user_id", "risk")
       .write.mode("overwrite").parquet(dir)
     // staleness 0 → every batch re-resolves (the reference's ~1 min rule,

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,7 +28,7 @@ class TablesSpec extends SparkSpec {
 
     // generation B: TIMESTAMP_NTZ (the regenerated testdata shape) — write
     // and read through parquet to exercise the real scan type
-    val tmp = Files.createTempDirectory("graft_tables").resolve("ntz.parquet")
+    val tmp = tempDir("graft_tables").resolve("ntz.parquet")
     micros.map(m => java.time.LocalDateTime.ofEpochSecond(
         m / 1000000, (m % 1000000).toInt * 1000, java.time.ZoneOffset.UTC))
       .toDF("ts").write.parquet(tmp.toString)

@@ -65,8 +65,7 @@ class WebCurationSpec extends SparkSpec {
         " contact agent 555-123-4567 now.")
     ).toDF("doc_id", "lang", "text")
 
-    val t = java.nio.file.Files
-      .createTempDirectory("web_curation_spec").toString
+    val t = tempDir("web_curation_spec").toString
     WebCuration.run(spark, docs, t,
       suffixes = Seq("com", "net", "org", "co.uk"),
       blockedDomains = Seq("example.net"),
@@ -129,8 +128,7 @@ class WebCurationSpec extends SparkSpec {
       (10L, "en", baseSents("ten", en).mkString(" ") +
         " contact agent 555-123-4567 now.")
     ).toDF("doc_id", "lang", "text")
-    val t = java.nio.file.Files
-      .createTempDirectory("web_curation_fold_spec").toString
+    val t = tempDir("web_curation_fold_spec").toString
     def batch(cut: org.apache.spark.sql.Column): Unit =
       WebCuration.runBatch(spark, docs.filter(cut), t,
         suffixes = Seq("com", "net", "org", "co.uk"),
