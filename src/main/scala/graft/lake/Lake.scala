@@ -1,6 +1,10 @@
 package graft.lake
 
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -55,9 +59,56 @@ object Lake {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(PartitionCol).parquet(path)
 
-  /** Partition-pruned read: `WHERE ts_hour IN …` prunes directories. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("basePath", path).parquet(path)
+  /** Partition-pruned read: `WHERE ts_hour IN …` prunes directories.
+    *
+    * The table schema is read on the driver from one parquet footer, the one
+    * Spark's own inference reads: the first data file by full path
+    * (`ParquetUtils.splitFiles`), converted by Spark's converter
+    * ([[GraftParquetBridge.footerSchema]]). Planning then starts no Spark
+    * job; Spark's inference would run a one-task job for that footer. A
+    * path that is missing, a glob or not a directory, that holds no data
+    * file, or that shows a parquet summary file on the way to the first one,
+    * is left to Spark's inference, which keeps its errors and its choice.
+    */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val reader = spark.read.option("basePath", path)
+    firstDataFile(spark, path).flatMap(GraftParquetBridge.footerSchema(spark, _)) match {
+      case Some(schema) => reader.schema(schema).parquet(path)
+      case None => reader.parquet(path)
+    }
+  }
+
+  private val SummaryFiles = Set("_metadata", "_common_metadata")
+
+  /** The least data file under `path` by full path, among the entries
+    * Spark's file index keeps. A best-first walk: a directory waits in the
+    * queue under its path plus "/", a lower bound of every path below it,
+    * so the first file dequeued is the least of all, and only the
+    * directories on the way to it are listed (the root and one hour for an
+    * hour-partitioned table), whatever the table's size.
+    */
+  private def firstDataFile(spark: SparkSession, path: String): Option[FileStatus] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rootDir = if (path.exists("{}[]*?\\".contains(_))) None
+      else scala.util.Try(fs.getFileStatus(root)).toOption.filter(_.isDirectory)
+    val queue = mutable.PriorityQueue.empty[(String, FileStatus)](
+      Ordering.by[(String, FileStatus), String](_._1).reverse)
+    def list(dir: FileStatus): Boolean = {
+      val kept = fs.listStatus(dir.getPath)
+        .filter(st => GraftParquetBridge.listedByFileIndex(st.getPath.getName))
+      kept.foreach(st => queue.enqueue(
+        (if (st.isDirectory) s"${st.getPath}/" else st.getPath.toString, st)))
+      !kept.exists(st => SummaryFiles(st.getPath.getName))
+    }
+    var found: Option[FileStatus] = None
+    var walk = rootDir.exists(list)
+    while (walk && found.isEmpty && queue.nonEmpty) {
+      val (_, st) = queue.dequeue()
+      if (st.isDirectory) walk = list(st) else found = Some(st)
+    }
+    found.filter(_ => walk)
+  }
 
   /** Bin-pack one hour partition to ~targetBytes files (the hourly
     * OPTIMIZE job): rewrite that partition's files only.

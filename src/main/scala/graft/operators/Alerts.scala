@@ -2,8 +2,10 @@ package graft.operators
 
 import java.sql.Timestamp
 
+import graft.plans.AnchoredSession
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Alert dedup/threshold aggregation — the reference's A1 operator
   * (lib/rust/lake_writer/src/matano_alerts.rs:92-360).
@@ -19,9 +21,12 @@ import org.apache.spark.sql.functions._
   * boundary depends on the previous anchor), so it cannot be a plain window
   * function; it is a per-key fold behind a hash shuffle on
   * (rule_name, dedupe) — the same distribution the reference's hash
-  * aggregation uses. Per-key data is bounded by rule match rate × window,
-  * so groups stay small at any corpus scale; the shuffle moves only match
-  * keys and timestamps, not event payloads.
+  * aggregation uses. [[aggregate]] runs it as the native
+  * `plans.AnchoredSession` operator: one shuffle, one sort, one streaming
+  * pass over the sorted rows with no per-group buffer; [[foldKey]] is the
+  * same fold over one key's matches, the semantics the operator is checked
+  * against. The shuffle moves only match keys and timestamps, not event
+  * payloads.
   *
   * Alert ids are deterministic (md5 of key + anchor) rather than random
   * UUIDs: idempotent re-runs produce identical ids, which is what makes
@@ -83,17 +88,18 @@ object Alerts {
     d.map("%02x".format(_)).mkString
   }
 
-  /** Batch aggregation: matches (rule_name, dedupe, match_id, ts) → alerts.
-    * One shuffle on (rule_name, dedupe); per-key sequential fold.
+  /** Batch aggregation: matches (rule_name, dedupe, ts; other columns are
+    * ignored) → alerts, on the native `plans.AnchoredSession` operator.
+    * Keys keep their values: a null `dedupe` (or `rule_name`) is a key of
+    * its own, stays null in the output, and its alert id hashes
+    * `rule|null|ms`, as [[foldKey]] and [[alertId]] give. A match with a
+    * null `ts` is dropped, as the reference sidelines records without an
+    * event time (P8); [[foldKey]] cannot order one and throws.
     */
   def aggregate(spark: SparkSession, matches: DataFrame, cfg: AlertConfig): Dataset[AlertRow] = {
     import spark.implicits._
-    matches.select(col("rule_name"), col("dedupe"), col("match_id"), col("ts"))
-      .as[MatchRow]
-      .groupByKey(m => (m.rule_name, m.dedupe))
-      .flatMapGroups { (key: (String, String), it: Iterator[MatchRow]) =>
-        foldKey(key._1, key._2, it.toSeq.sortBy(m => tsToUs(m.ts)), cfg).iterator
-      }
+    AnchoredSession.fold(spark, matches, col("rule_name").cast(StringType),
+      col("dedupe").cast(StringType), cfg).as[AlertRow]
   }
 
   /** Retro-activation (reference matano_alerts.rs:309-444): when a late

@@ -145,12 +145,24 @@ object Detection {
     * rule.{name,severity,threshold,deduplication_window}}`. These rows
     * re-enter the lake pipeline as their own log source, exactly as the
     * reference recurses alerts through E1.
+    *
+    * Rule metadata attaches without a join: each alert row filters the
+    * literal array of the rules' (name, severity, threshold, window) by its
+    * `rule_name`, and one `inline` emits a row per entry left, so the rows
+    * are those of an inner join on the name — an alert of an unknown (or
+    * null) rule name is dropped, and a name given twice keeps both rows.
+    * No broadcast job runs and no shuffle is planned.
     */
   def matanoAlertRows(alerts: DataFrame, rules: Seq[Rule], table: String): DataFrame = {
-    val meta = rules.map(r => (r.name, r.severity, r.threshold, r.windowSeconds))
-    val metaDf = alerts.sparkSession.createDataFrame(meta)
-      .toDF("rule_name", "severity", "threshold", "deduplication_window")
-    alerts.join(broadcast(metaDf), Seq("rule_name"))
+    def entry(name: Column, severity: Column, threshold: Column, window: Column): Column =
+      struct(name.as("__rule"), severity.as("severity"), threshold.as("threshold"),
+        window.as("deduplication_window"))
+    val meta = array((if (rules.nonEmpty)
+        rules.map(r => entry(lit(r.name), lit(r.severity), lit(r.threshold), lit(r.windowSeconds)))
+      // zero rules: one entry named null, which no rule_name equals
+      else Seq(entry(lit(null).cast("string"), lit(null).cast("string"),
+        lit(null).cast("int"), lit(null).cast("long")))): _*)
+    alerts.select(col("*"), inline(filter(meta, _.getField("__rule") === col("rule_name"))))
       .select(
         col("last_matched_at").as("ts"),
         struct(

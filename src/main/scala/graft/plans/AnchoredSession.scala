@@ -2,19 +2,21 @@ package graft.plans
 
 import graft.operators.Alerts.AlertConfig
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, Expression, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The anchored-session alert aggregation as a first-class operator:
   * custom LogicalPlan + Strategy + SparkPlan (tier (c) of the build
-  * rules), replacing the `Dataset.groupByKey.flatMapGroups` form.
+  * rules), replacing the `Dataset.groupByKey.flatMapGroups` form:
+  * `operators.Alerts.aggregate` and the queries that fold alerts all plan
+  * this exec.
   *
   * Why a physical operator: the typed-API form round-trips every row
   * through encoders (InternalRow → case class → InternalRow) and buffers
@@ -23,10 +25,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * requiredChildOrdering = (rule, dedupe, ts), so Spark plans exactly one
   * hash shuffle + one sort, and the fold itself is a single streaming
   * pass over InternalRows — no per-row object materialization, no
-  * per-group buffering, constant memory per partition.
+  * per-group buffering, constant memory per partition. Keys compare
+  * null-safely: a null rule or dedupe is a key of its own.
   *
   * Semantics are identical to operators.Alerts.foldKey (asserted in
-  * AnchoredSessionSpec against the Dataset form and the property fold).
+  * AnchoredSessionSpec against the typed fold kept as the specs'
+  * reference, and against the property fold).
   */
 object AnchoredSession {
 
@@ -88,6 +92,7 @@ object AnchoredSession {
         new Iterator[InternalRow] {
           private val proj = UnsafeProjection.create(schema.toArray)
           private val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(8)
+          private var open = false
           private var curRule: UTF8String = _
           private var curDedupe: UTF8String = _
           private var firstUs = Long.MinValue
@@ -102,6 +107,12 @@ object AnchoredSession {
             UTF8String.fromString(d.map("%02x".format(_)).mkString)
           }
 
+          private def same(a: UTF8String, b: UTF8String): Boolean =
+            if (a == null) b == null else a.equals(b)
+
+          private def copyOf(s: UTF8String): UTF8String = if (s == null) null else s.clone()
+
+          // a null key renders as "null" in the id, as in Alerts.alertId
           private def closeAlert(): InternalRow = {
             out.update(0, curRule)
             out.update(1, curDedupe)
@@ -120,10 +131,10 @@ object AnchoredSession {
               val r = ruleBound.eval(row).asInstanceOf[UTF8String]
               val d = dedupeBound.eval(row).asInstanceOf[UTF8String]
               val us = tsBound.eval(row).asInstanceOf[Long]
-              val newKey = curRule == null || !r.equals(curRule) || !d.equals(curDedupe)
-              if (newKey || us >= firstUs + windowUs) {
-                if (curRule != null) pending = closeAlert()
-                curRule = r.clone(); curDedupe = d.clone()
+              if (!open || !same(r, curRule) || !same(d, curDedupe) || us >= firstUs + windowUs) {
+                if (open) pending = closeAlert()
+                open = true
+                curRule = copyOf(r); curDedupe = copyOf(d)
                 firstUs = us; lastUs = us; n = 1
                 createdUs = if (th <= 1) us else Long.MinValue
               } else {
@@ -132,9 +143,9 @@ object AnchoredSession {
                 if (createdUs == Long.MinValue && n >= th) createdUs = us
               }
             }
-            if (pending == null && curRule != null) {
+            if (pending == null && open) {
               pending = closeAlert()
-              curRule = null
+              open = false
             }
           }
 
@@ -154,10 +165,22 @@ object AnchoredSession {
   @volatile private var registered = Set.empty[SparkSession]
 
   /** Aggregate matches (rule_name, dedupe, ts columns) into alert rows via
-    * the native operator. Registers the planner strategy on first use
-    * (public `spark.experimental.extraStrategies` hook).
+    * the native operator. Null keys normalize to "" and null event times
+    * are dropped (the reference sidelines records without a parseable ts,
+    * P8), the contract of the queries that fold alerts.
     */
-  def aggregate(spark: SparkSession, matches: DataFrame, cfg: AlertConfig): DataFrame = {
+  def aggregate(spark: SparkSession, matches: DataFrame, cfg: AlertConfig): DataFrame =
+    fold(spark, matches,
+      coalesce(col("rule_name").cast(StringType), lit("")),
+      coalesce(col("dedupe").cast(StringType), lit("")), cfg)
+
+  /** The native fold over `matches` keyed by `rule` and `dedupe` (string
+    * columns, compared null-safely) in `ts` order; rows with a null `ts`
+    * are dropped. Registers the planner strategy on first use (public
+    * `spark.experimental.extraStrategies` hook).
+    */
+  def fold(spark: SparkSession, matches: DataFrame, rule: Column, dedupe: Column,
+      cfg: AlertConfig): DataFrame = {
     if (!registered.contains(spark)) synchronized {
       if (!registered.contains(spark)) {
         spark.experimental.extraStrategies =
@@ -165,19 +188,9 @@ object AnchoredSession {
         registered += spark
       }
     }
-    // null keys normalize to "" and null event times are dropped (the
-    // reference sidelines records without a parseable ts, P8) — keeps the
-    // InternalRow fold total without per-row null branches.
     val child = matches
       .filter(col("ts").isNotNull)
-      .select(
-        org.apache.spark.sql.functions.coalesce(
-          col("rule_name").cast(StringType),
-          org.apache.spark.sql.functions.lit("")).as("rule_name"),
-        org.apache.spark.sql.functions.coalesce(
-          col("dedupe").cast(StringType),
-          org.apache.spark.sql.functions.lit("")).as("dedupe"),
-        col("ts"))
+      .select(rule.as("rule_name"), dedupe.as("dedupe"), col("ts"))
     val plan = GraftBridge.logicalPlan(child)
     val Seq(r, d, t) = plan.output.toSeq
     GraftBridge.ofRows(spark, AnchoredSessionAgg(plan, r, d, t,

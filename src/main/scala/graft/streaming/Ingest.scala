@@ -46,10 +46,16 @@ object Ingest {
       val counted = flagged.observe(mismatched,
         count_if(col(SchemaResolver.ErrorFlag)).as("n"))
       Lake.append(SchemaResolver.split(counted, p.target).resolved, p.lakePath)
-      if (mismatched.get("n") != 0L)
+      if (mismatched.get("n") != 0L) {
+        // a sidelined row without an event time gets the batch time, read
+        // from a UDF's closure: `current_timestamp()` folds to a literal
+        // that codegen inlines, so each batch's code would differ and compile
+        val batchTime = java.sql.Timestamp.from(java.time.Instant.now())
+        val now = udf(() => batchTime)
         SchemaResolver.split(flagged, p.target).sidelined
-          .withColumn("ts", coalesce(col("ts").cast("timestamp"), current_timestamp()))
+          .withColumn("ts", coalesce(col("ts").cast("timestamp"), now()))
           .write.mode("append").partitionBy("error_kind").json(p.sidelinePath)
+      }
     } finally flagged.unpersist(blocking = true)
   }
 

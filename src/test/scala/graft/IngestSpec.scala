@@ -342,4 +342,47 @@ class IngestSpec extends SparkSpec {
     Ingest.processBatch(p)(batch.limit(0), 0L)
     assert(!Files.exists(java.nio.file.Paths.get(p.sidelinePath)))
   }
+
+  test("a third sideline batch of the same shape compiles no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (_, batch, pipeline) = singlePassFixture("graft_sideline_codegen")
+    val p = pipeline("out")
+    Ingest.processBatch(p)(batch, 0L)
+    Ingest.processBatch(p)(batch, 1L)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    Ingest.processBatch(p)(batch, 2L)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0,
+      "the batch time must not be inlined into the sideline write's generated code")
+    val side = spark.read.json(p.sidelinePath)
+    assert(side.count() == 27 && side.filter(col("ts").isNull).isEmpty)
+  }
+
+  test("dispatch floor: every job of an ingest round belongs to one of its three writes") {
+    import graft.lake.Lake
+    import graft.operators.{Alerts, Detection}
+    import graft.operators.Detection.SimpleRule
+    val (tmp, batch, pipeline) = singlePassFixture("graft_dispatch_floor")
+    val p = pipeline("out")
+    val rules = Seq(
+      SimpleRule("e1", col("event_type") === "e1", dedupe = col("user_id").cast("string")),
+      SimpleRule("e2", col("event_type") === "e2", severity = "high", threshold = 2,
+        windowSeconds = 1800))
+    val alertsLake = tmp.resolve("alerts").toString
+    val (_, log) = JobLog.during(spark) {
+      Ingest.processBatch(p)(batch, 0L)
+      val hour = Lake.read(spark, p.lakePath).filter(col(Lake.PartitionCol) === "2024-01-01-05")
+      val matches = Detection.ruleMatches(hour, rules, xxhash64(col("user_id")))
+      val alerts = Alerts.aggregate(spark, matches, Alerts.AlertConfig(1, 3600)).toDF
+      Lake.append(Detection.matanoAlertRows(alerts, rules, "events"), alertsLake)
+    }
+    val jobs = log.jobs
+    assert(jobs.nonEmpty)
+    val outside = jobs.filterNot(
+      _.execution.exists(e => log.plan(e).contains("InsertIntoHadoopFsRelationCommand")))
+    assert(outside.isEmpty, s"jobs outside a write: $outside")
+    assert(jobs.flatMap(_.execution).distinct.size == 3, "the lake, sideline and alerts writes")
+    val broadcasts = jobs.filter(_.tags.contains("broadcast exchange"))
+    assert(broadcasts.isEmpty, s"broadcast jobs: $broadcasts")
+    assert(Lake.read(spark, alertsLake).count() > 0)
+  }
 }

@@ -29,6 +29,65 @@ class LakeSpec extends SparkSpec {
     assert(back.select(sum("id")).head.getLong(0) == (1 to 500).map(_.toLong).sum)
   }
 
+  /** Lake.read's schema against Spark's own inference, and the jobs it
+    * starts (none).
+    */
+  private def assertReadParity(path: String): Unit = {
+    val (df, log) = JobLog.during(spark)(Lake.read(spark, path))
+    assert(log.jobs.isEmpty, s"Lake.read started jobs ${log.jobs}")
+    assert(df.schema == spark.read.option("basePath", path).parquet(path).schema)
+  }
+
+  private def hourRows(hours: Seq[Int], extra: Boolean = false) = {
+    val base = hours.flatMap(h => (0 until 20).map(i =>
+      (h * 100L + i, java.sql.Timestamp.valueOf(f"2024-03-01 $h%02d:${i % 60}%02d:00"),
+        s"u$i", Seq(i, i + 1), Map(s"k$i" -> i.toDouble))))
+      .toDF("id", "ts", "user", "tags", "attrs")
+      .withColumn("src", struct(col("user").as("name"), (col("id") % 7).cast("decimal(10,2)").as("bytes")))
+    if (extra) base.withColumn("added", concat(col("user"), lit("!"))) else base
+  }
+
+  test("Lake.read: schema of a multi-hour lake equals Spark's inference, no job") {
+    val tmp = tempDir("graft_read_hours").toString
+    Lake.append(hourRows(Seq(1, 2, 3)).repartition(3), tmp)
+    Lake.append(hourRows(Seq(2, 4)), tmp)
+    assertReadParity(tmp)
+    assert(Lake.read(spark, tmp).filter(col(Lake.PartitionCol) === "2024-03-01-02").count() == 40)
+  }
+
+  test("Lake.read: _SUCCESS, .crc and _graft_lake/ entries are not read for the schema") {
+    val tmp = tempDir("graft_read_hidden").toString
+    Lake.append(hourRows(Seq(5)), tmp)
+    // entries Spark's index skips, each sorting before the hour directory
+    // and holding parquet of another schema
+    Seq("_graft_lake/v1", ".staging").foreach(d =>
+      Seq(("x", 1)).toDF("other", "n").write.parquet(s"$tmp/$d"))
+    assert(new java.io.File(tmp, "_SUCCESS").exists)
+    assert(new java.io.File(s"$tmp/ts_hour=2024-03-01-05").list().exists(_.endsWith(".crc")))
+    assertReadParity(tmp)
+    assert(!Lake.read(spark, tmp).columns.contains("other"))
+  }
+
+  test("Lake.read: an evolveAppend-widened table reads the footer Spark's inference reads") {
+    // the widened file sorts last (a later hour), first (an earlier hour),
+    // and beside the narrow one in the same hour
+    for ((name, wideHours) <- Seq("later" -> Seq(9), "earlier" -> Seq(6), "same" -> Seq(7))) {
+      val tmp = tempDir(s"graft_read_evolve_$name").toString
+      Lake.evolveAppend(spark, hourRows(Seq(7, 8)), tmp)
+      Lake.evolveAppend(spark, hourRows(wideHours, extra = true), tmp)
+      assertReadParity(tmp)
+    }
+  }
+
+  test("Lake.read: a missing or empty path throws what Spark's read throws") {
+    def thrown(read: => Any): Class[_] = intercept[Exception](read).getClass
+    val missing = tempDir("graft_read_missing").resolve("absent").toString
+    val empty = tempDir("graft_read_empty").toString
+    for (p <- Seq(missing, empty))
+      assert(thrown(Lake.read(spark, p)) ==
+        thrown(spark.read.option("basePath", p).parquet(p)))
+  }
+
   test("relatedPrelude seeds empty related arrays") {
     val df = Seq(("x", 1)).toDF("a", "b")
     val out = TransformDsl.relatedPrelude(df)

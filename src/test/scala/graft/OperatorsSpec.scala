@@ -643,6 +643,33 @@ class OperatorsSpec extends SparkSpec {
     assert(out.columns.contains("rule_name") && out.columns.contains("deduplication_window"))
   }
 
+  test("matanoAlertRows equals the broadcast-join form, with no BroadcastExchange") {
+    import graft.operators.{Alerts, Detection}
+    import graft.operators.Detection.SimpleRule
+    def t(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
+    val alerts = Seq(
+      Alerts.AlertRow("login", "alice", "a1", t(0), t(5), 3L, true, Some(t(2))),
+      Alerts.AlertRow("login", null, "a2", t(1), t(1), 1L, false, None),
+      Alerts.AlertRow("delete", "bob", "a3", t(3), t(9), 2L, true, Some(t(9))),
+      Alerts.AlertRow("unknown", "carol", "a4", t(4), t(4), 1L, true, Some(t(4))),
+      Alerts.AlertRow(null, "dave", "a5", t(6), t(6), 1L, true, Some(t(6)))).toDF
+    val login = SimpleRule("login", lit(true), severity = "info", threshold = 3, windowSeconds = 600)
+    val delete = SimpleRule("delete", lit(true), severity = "high")
+    // "delete" twice, once with other metadata: both rows are kept
+    val packs = Seq(Seq(login, delete), Seq(login, delete, delete.copy(severity = "low")),
+      Seq(delete), Seq.empty)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for (rules <- packs) {
+      val got = Detection.matanoAlertRows(alerts, rules, "events")
+      assert(rows(got) == rows(BroadcastAlertRows(alerts, rules, "events")), s"pack $rules")
+      val plan = got.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastExchange") && !plan.contains("Join"), plan)
+    }
+    val twice = Detection.matanoAlertRows(alerts, packs(1), "events")
+    assert(twice.filter(col("matano.alert.id") === "a3").count() == 2)
+    assert(twice.filter(col("matano.alert.id").isin("a4", "a5")).isEmpty)
+  }
+
   test("ruleMatches: one-scan pack equals the per-rule union on every pack shape") {
     import graft.operators.Detection
     import graft.operators.Detection.{ImperativeRule, SimpleRule}
