@@ -6,7 +6,6 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Lake layout + maintenance: hour-partitioned columnar storage with
   * partition-level rewrite, mirroring the reference's Iceberg usage
@@ -23,23 +22,24 @@ import org.apache.spark.sql.types.StructType
   * layer is therefore hour-partitioned zstd parquet with Spark dynamic
   * partition overwrite — the same layout and commit-semantics class; on a
   * cluster with an Iceberg catalog these calls become
-  * `writeTo(t).append()` / `overwritePartitions()` /
-  * `CALL rewrite_data_files` with no operator changes above them. The
-  * catalog-only features that ARE expressible without the jars live
-  * here: schema evolution ([[evolveAppend]] = the reference's
+  * `writeTo(t).append()` / `CALL rewrite_data_files` with no operator
+  * changes above them. The catalog-only features that ARE expressible
+  * without the jars — atomic commits, schema evolution (the reference's
   * `unionByNameWith`, MatanoIcebergTableCustomResource.kt:194-212) and
-  * key-based MERGE scoped to touched partitions ([[mergeUpsert]],
-  * Enrichment.kt:305-324).
+  * key-based MERGE scoped to touched partitions (Enrichment.kt:305-324,
+  * retro-activation in AlertsIcebergHelper.kt) — live in [[Snapshots]],
+  * the lake's one commit path. This object keeps the plain append, read
+  * and hourly compaction that [[graft.streaming.Ingest]], q45 and
+  * `lakebench` use, and the layout helpers.
   */
 object Lake {
 
   val PartitionCol = "ts_hour"
 
   /** Stamp the reference's `%Y-%m-%d-%H` partition value from event time.
-    * A frame that already carries the partition column keeps it — updates
-    * flowing back through [[overwritePartitions]] must stay in their
-    * ORIGINAL partition (dynamic overwrite would otherwise delete every
-    * row of any partition a re-derived value happens to land in).
+    * A frame that already carries the partition column keeps it — rows a
+    * rewrite reads back ([[Snapshots.mergeUpsert]]) must stay in their
+    * ORIGINAL partition, whatever their updated event time re-derives.
     */
   def withHourPartition(df: DataFrame, tsCol: String = "ts"): DataFrame =
     if (df.columns.contains(PartitionCol)) df
@@ -48,15 +48,6 @@ object Lake {
   /** Append rows into hour partitions. */
   def append(df: DataFrame, path: String): Unit =
     withHourPartition(df).write.mode("append")
-      .partitionBy(PartitionCol).parquet(path)
-
-  /** Overwrite only the partitions present in `df` (retro-activation /
-    * enrichment refresh path). Requires dynamic partitionOverwriteMode,
-    * set per-write here so session config stays untouched.
-    */
-  def overwritePartitions(df: DataFrame, path: String): Unit =
-    withHourPartition(df).write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(PartitionCol).parquet(path)
 
   /** Partition-pruned read: `WHERE ts_hour IN …` prunes directories.
@@ -111,69 +102,18 @@ object Lake {
   }
 
   /** Bin-pack one hour partition to ~targetBytes files (the hourly
-    * OPTIMIZE job): rewrite that partition's files only.
+    * OPTIMIZE job): rewrite that partition's files only, by a dynamic
+    * partition overwrite (set per write, so session config stays
+    * untouched).
     */
   def compactHour(spark: SparkSession, path: String, hour: String,
       targetBytes: Long = 128L * 1024 * 1024): Unit = {
     val part = read(spark, path).filter(col(PartitionCol) === hour)
-    val bytes = part.queryExecution.optimizedPlan.stats.sizeInBytes
-    val files = math.max(1, (BigDecimal(bytes) / targetBytes).setScale(0, BigDecimal.RoundingMode.CEILING).toInt)
-    overwritePartitions(part.repartition(files).drop(PartitionCol), path)
+    val files = Snapshots.binPackFiles(part, targetBytes)
+    withHourPartition(part.repartition(files).drop(PartitionCol)).write
+      .mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(PartitionCol).parquet(path)
   }
-
-  /** Schema-evolving append — the reference evolves the Iceberg table
-    * schema by name-union when a source mapping grows fields
-    * (`unionByNameWith`): columns new in `df` appear in the table (old
-    * rows read null there via parquet schema merge); columns the table
-    * has but `df` lacks are null-filled on the incoming side. Top-level
-    * name union; struct-internal evolution follows parquet's by-name
-    * field resolution on read.
-    */
-  /** Evolved-schema cache: merging every file footer per append would be
-    * O(total files) at scale (a real catalog stores the schema in table
-    * metadata); one merge per session per path, then evolved in-memory as
-    * appends widen it.
-    *
-    * SINGLE-WRITER ASSUMPTION: the cache is per-JVM, so a second writer
-    * process appending to the same path with a schema this JVM hasn't seen
-    * would evolve from a stale union (reads still self-heal via
-    * mergeSchema). Multi-writer deployments should route appends through
-    * [[Snapshots]], whose manifest CAS serializes commits; [[invalidateSchema]]
-    * drops a path's cached entry for callers that know the table changed
-    * underneath them.
-    */
-  private val schemaCache = scala.collection.concurrent.TrieMap.empty[String, StructType]
-
-  /** Drop the cached evolved schema for `path` (re-derived on next append). */
-  def invalidateSchema(path: String): Unit = schemaCache.remove(path)
-
-  def evolveAppend(spark: SparkSession, df: DataFrame, path: String): Unit = {
-    val existing = schemaCache.get(path).orElse(scala.util.Try(
-      spark.read.option("basePath", path).option("mergeSchema", "true")
-        .parquet(path).schema).toOption)
-    val aligned = existing match {
-      case None => df
-      case Some(tableSchema) =>
-        val have = df.columns.toSet
-        val missing = tableSchema.fields.filterNot(f =>
-          have.contains(f.name) || f.name == PartitionCol)
-        missing.foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-    }
-    append(aligned, path)
-    // table schema after this append = name-union of what was there + df
-    val union = existing match {
-      case None => aligned.schema
-      case Some(prev) => StructType(prev.fields ++
-        aligned.schema.fields.filterNot(f => prev.fieldNames.contains(f.name)))
-    }
-    schemaCache.put(path, StructType(union.filterNot(_.name == PartitionCol)))
-  }
-
-  /** Evolution-aware read: parquet schema merge unions all file schemas
-    * (old files resolve new columns to null by name).
-    */
-  def readEvolved(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("basePath", path).option("mergeSchema", "true").parquet(path)
 
   /** Broadcast hint only when the plan-estimated size fits a broadcast
     * (enrichment-sized update batches); a backfill-scale update frame
@@ -192,71 +132,6 @@ object Lake {
   def fitsBroadcast(df: DataFrame,
       maxBytes: Long = 64L * 1024 * 1024): Boolean =
     df.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBytes
-
-  /** Key-based MERGE INTO on the lake (reference Enrichment.kt:305-324:
-    * `WHEN MATCHED UPDATE, WHEN NOT MATCHED INSERT`), rewriting ONLY the
-    * hour partitions that contain matched keys; unmatched-key updates
-    * append into their own event-time partitions. Partitions untouched by
-    * any update are never read or rewritten — at 100 TB the rewrite cost
-    * scales with the update's partition footprint, not table size.
-    */
-  /** Iceberg's MERGE cardinality rule, shared by both merge entry points
-    * (here and [[Snapshots.mergeUpsert]]): multiple source rows per key
-    * would silently multiply matched target rows through the merge join.
-    */
-  private[lake] def requireUniquePk(updates: DataFrame, pk: String): Unit = {
-    val dupes = updates.groupBy(col(pk)).count().filter(col("count") > 1).limit(1)
-    if (!dupes.isEmpty)
-      throw new IllegalArgumentException(
-        s"mergeUpsert: updates contain duplicate values of primary key '$pk'")
-  }
-
-  def mergeUpsert(spark: SparkSession, path: String, updatesIn: DataFrame, pk: String): Unit = {
-    // four actions reference the update frame (pk check, match probe,
-    // rewrite, insert) — materialize once, as in Snapshots.mergeUpsert
-    val updates = updatesIn.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try mergeUpsertImpl(spark, path, updates, pk)
-    finally updates.unpersist(false)
-  }
-
-  private def mergeUpsertImpl(spark: SparkSession, path: String,
-      updates: DataFrame, pk: String): Unit = {
-    requireUniquePk(updates, pk)
-    val lake = read(spark, path)
-    val renamed = updates.columns.foldLeft(updates)((d, c) => d.withColumnRenamed(c, "__u_" + c))
-    // ONE scan locates matched keys + their partitions (tiny result:
-    // bounded by |updates| × partitions-per-key); persisted so the rewrite
-    // and insert branches below don't rescan the lake
-    val gated = sizeGatedBroadcast(renamed)
-    val matched = lake.join(gated, col(pk) === col("__u_" + pk))
-      .select(col(PartitionCol), col(pk)).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val touchedHours = matched.select(col(PartitionCol)).distinct()
-      val affected = lake.join(broadcast(touchedHours), Seq(PartitionCol))
-      val updatedCols = updates.columns.filterNot(_ == pk)
-      // keep each rewritten row in its ORIGINAL hour partition (even if an
-      // updated ts would re-derive differently) — the rewrite set covers
-      // only matched partitions, so letting a row migrate into an
-      // untouched partition would dynamic-overwrite that partition down to
-      // the single migrated row. Cross-partition moves are delete+insert,
-      // as in Iceberg.
-      val rewritten = updatedCols.foldLeft(
-          affected.join(gated, col(pk) === col("__u_" + pk), "left")) {
-          (d, c) => d.withColumn(c, coalesce(col("__u_" + c), col(c)))
-        }
-        .drop(updates.columns.map("__u_" + _).toIndexedSeq: _*)
-      overwritePartitions(rewritten, path)
-      // inserts: update keys matched nowhere (rows must carry event time
-      // for their partition, as any lake append does)
-      val inserts = renamed.join(matched.select(col(pk)).distinct(),
-          col("__u_" + pk) === col(pk), "left_anti")
-      val insertDf = updates.columns.foldLeft(inserts)((d, c) =>
-        d.withColumnRenamed("__u_" + c, c))
-      if (!insertDf.isEmpty) append(insertDf, path)
-    } finally matched.unpersist()
-  }
 
   /** Z-order (Morton) key of two non-negative integral columns — the
     * MULTI-dimension clustering device: bit-interleaving makes file

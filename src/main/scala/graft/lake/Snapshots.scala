@@ -133,13 +133,17 @@ object Snapshots {
     * a schema, so callers check [[currentVersion]] first (as with any
     * not-yet-created table).
     */
-  def read(spark: SparkSession, table: String, version: Option[Int] = None,
-      mergeSchema: Boolean = false): DataFrame = {
-    val snap = version.map(snapshot(table, _))
-      .orElse(current(table))
-      .getOrElse(sys.error(s"no snapshot committed at $table"))
-    readEntries(spark, table, snap.entries, mergeSchema, snap.schema)
+  def read(spark: SparkSession, table: String, version: Option[Int] = None): DataFrame = {
+    val snap = pin(table, version)
+    readEntries(spark, table, snap.entries, snap.schema)
   }
+
+  /** The snapshot at `version` (default: current); an error for a table
+    * with no commit.
+    */
+  private def pin(table: String, version: Option[Int] = None): Snapshot =
+    version.map(snapshot(table, _)).orElse(current(table))
+      .getOrElse(sys.error(s"no snapshot committed at $table"))
 
   /** Time travel: read the newest RETAINED snapshot committed at or
     * before `epochMillis` (Iceberg's timestamp-as-of). Versions without a
@@ -185,11 +189,9 @@ object Snapshots {
   /** Manifest-level partition pruning: plan a scan over only the files of
     * `hours` — untouched partitions are never listed or opened.
     */
-  def readHours(spark: SparkSession, table: String, hours: Set[String],
-      mergeSchema: Boolean = false): DataFrame = {
-    val snap = current(table).getOrElse(sys.error(s"no snapshot committed at $table"))
-    readEntries(spark, table, snap.entries.filter(e => hours(e.hour)), mergeSchema,
-      snap.schema)
+  def readHours(spark: SparkSession, table: String, hours: Set[String]): DataFrame = {
+    val snap = pin(table)
+    readEntries(spark, table, snap.entries.filter(e => hours(e.hour)), snap.schema)
   }
 
   /** Zone-map file skipping: plan a scan over only the files whose
@@ -206,7 +208,7 @@ object Snapshots {
     */
   def pruneStats(table: String,
       filters: Seq[org.apache.spark.sql.sources.Filter]): (Int, Int) = {
-    val snap = current(table).getOrElse(sys.error(s"no snapshot at $table"))
+    val snap = pin(table)
     val kept = snap.entries.count(e =>
       e.stats.forall(st => filters.forall(f => FileStats.mayMatch(f, st))))
     (kept, snap.entries.size)
@@ -214,15 +216,13 @@ object Snapshots {
 
   def readWhere(spark: SparkSession, table: String,
       filters: Seq[org.apache.spark.sql.sources.Filter],
-      version: Option[Int] = None, mergeSchema: Boolean = false): DataFrame = {
-    val snap = version.map(snapshot(table, _))
-      .orElse(current(table))
-      .getOrElse(sys.error(s"no snapshot committed at $table"))
+      version: Option[Int] = None): DataFrame = {
+    val snap = pin(table, version)
     val kept = snap.entries.filter(e =>
       e.stats.forall(st => filters.forall(f => FileStats.mayMatch(f, st))))
-    if (kept.nonEmpty) readEntries(spark, table, kept, mergeSchema, snap.schema)
+    if (kept.nonEmpty) readEntries(spark, table, kept, snap.schema)
     // every file pruned: keep the snapshot's schema, read no data
-    else readEntries(spark, table, snap.entries, mergeSchema, snap.schema).limit(0)
+    else readEntries(spark, table, snap.entries, snap.schema).limit(0)
   }
 
   /** Key-probe pruned read for REGISTRY tables (int64-keyed lookaside
@@ -255,7 +255,7 @@ object Snapshots {
     */
   def readKeyProbe(spark: SparkSession, table: String, keyCol: String,
       probeKeys: DataFrame): (DataFrame, Int, Int) = {
-    val snap = current(table).getOrElse(sys.error(s"no snapshot committed at $table"))
+    val snap = pin(table)
     val entries = snap.entries
     val ranged = entries.zipWithIndex.flatMap { case (e, i) =>
       for {
@@ -282,11 +282,9 @@ object Snapshots {
     val keptIdx = blind ++ touched
     val kept = entries.zipWithIndex.collect { case (e, i) if keptIdx(i) => e }
     val df =
-      if (kept.nonEmpty)
-        readEntries(spark, table, kept, mergeSchema = false, snap.schema)
+      if (kept.nonEmpty) readEntries(spark, table, kept, snap.schema)
       // every file pruned: keep the snapshot's schema, read no data
-      else readEntries(spark, table, entries, mergeSchema = false,
-        snap.schema).limit(0)
+      else readEntries(spark, table, entries, snap.schema).limit(0)
     (df, kept.size, entries.size)
   }
 
@@ -296,8 +294,11 @@ object Snapshots {
     * what restores [[readKeyProbe]] pruning power on a registry that has
     * accrued many per-commit runs (each commit's files are range-disjoint
     * WITHIN the commit but overlap across commits; after reclustering a
-    * point key touches one file table-wide). Pinned readers keep their
-    * file set; [[expireSnapshots]] reclaims the replaced files later.
+    * point key touches one file table-wide). The commit follows
+    * [[commitRewrite]]: files committed after the rewrite read the table
+    * carry forward, and a file it read that a concurrent rewrite replaced
+    * aborts it. Pinned readers keep their file set; [[expireSnapshots]]
+    * reclaims the replaced files later.
     *
     * Single-hour tables (registries use a constant hour — an index is
     * keyed by content hash, not time) recluster with no cross-hour file
@@ -306,35 +307,13 @@ object Snapshots {
     */
   def recluster(spark: SparkSession, table: String, cols: Seq[String],
       nFiles: Int): Int = {
-    val snap = current(table).getOrElse(
-      sys.error(s"no snapshot committed at $table"))
-    val rewritten = readEntries(spark, table, snap.entries,
-        mergeSchema = false, snap.schema)
+    val snap = pin(table)
+    val rewritten = readEntries(spark, table, snap.entries, snap.schema)
       .repartitionByRange(nFiles, cols.map(col): _*)
       .sortWithinPartitions(cols.map(col): _*)
       .drop(Lake.PartitionCol)
-    val staged = stage(rewritten, table)
-    // replace exactly the files this rewrite READ; entries committed
-    // concurrently between our pinned read and the commit carry forward
-    // (the compactSmallFiles discipline — `_ => staged` would silently
-    // drop a racing fold's fresh registrations on commit retry)
-    val rewrittenFiles = snap.entries.map(_.file).toSet
-    commit(table, Some(dataSchema(rewritten))) { prev =>
-      // conflict validation (Iceberg rewrite_data_files semantics): every
-      // file this rewrite READ must still be live. A concurrent mergeUpsert
-      // that rewrote one of them has already superseded its rows — blindly
-      // re-adding our staged copy would resurrect the pre-merge versions
-      // alongside the merged ones. Abort instead; the caller re-runs
-      // against the new snapshot (staged files are orphans the next
-      // expireSnapshots sweep reclaims).
-      val live = prev.iterator.map(_.file).toSet
-      val gone = rewrittenFiles.filterNot(live)
-      if (gone.nonEmpty)
-        sys.error(s"recluster conflict at $table: ${gone.size} file(s) " +
-          s"read by this rewrite were rewritten concurrently (e.g. " +
-          s"${gone.head}); re-run recluster against the current snapshot")
-      prev.filterNot(e => rewrittenFiles(e.file)) ++ staged
-    }
+    commitRewrite(table, "recluster", snap.entries, stage(rewritten, table),
+      dataSchema(rewritten))
   }
 
   /** Fraction of a snapshot's files whose `keyCol` zone-map range
@@ -382,8 +361,7 @@ object Snapshots {
       cols: Seq[String], maxOverlapFrac: Double = 0.3,
       nFiles: Int = 0, keysPerFile: Long = 3300L): Option[Int] = {
     require(cols.nonEmpty, "reclusterIfFragmented needs cluster columns")
-    val snap = current(table).getOrElse(
-      sys.error(s"no snapshot committed at $table"))
+    val snap = pin(table)
     if (snap.entries.size <= 1) return None
     if (keyOverlapFraction(table, cols.head) <= maxOverlapFrac) return None
     val target =
@@ -396,8 +374,8 @@ object Snapshots {
     Some(recluster(spark, table, cols, target))
   }
 
-  private def readEntries(spark: SparkSession, table: String,
-      entries: Seq[Entry], mergeSchema: Boolean,
+  private[lake] def readEntries(spark: SparkSession, table: String,
+      entries: Seq[Entry],
       schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
     val paths = entries.map(e => Paths.get(table).resolve(e.file).toString)
     // With a manifest schema, plan against IT: files written before a
@@ -405,9 +383,7 @@ object Snapshots {
     // files project down — and planning skips footer schema inference
     // entirely (no sample-file read, no mergeSchema listing pass).
     // Pre-schema manifests keep the old footer-inference path.
-    val reader = schema.fold(
-      spark.read.option("mergeSchema", mergeSchema.toString))(
-      s => spark.read.schema(s))
+    val reader = schema.fold(spark.read)(s => spark.read.schema(s))
     reader.parquet(paths: _*).withColumn(Lake.PartitionCol,
       regexp_extract(input_file_name(), "ts_hour=([^/]+)/", 1))
   }
@@ -417,7 +393,7 @@ object Snapshots {
   /** Stage `df` as immutable hour-partitioned files under a fresh commit
     * dir; returns (hour, relative file) entries for the manifest.
     */
-  private def stage(df: DataFrame, table: String): Vector[Entry] = {
+  private[lake] def stage(df: DataFrame, table: String): Vector[Entry] = {
     val commitDir = s"data/c${UUID.randomUUID().toString.take(12)}"
     val abs = Paths.get(table).resolve(commitDir)
     Lake.withHourPartition(df).write
@@ -491,8 +467,7 @@ object Snapshots {
     * recomputed INSIDE the retry loop, so columns added by a concurrent
     * winner survive this commit's manifest too.
     */
-  private def commit(table: String,
-      staged: Option[org.apache.spark.sql.types.StructType] = None)(
+  private def commit(table: String, staged: org.apache.spark.sql.types.StructType)(
       evolve: Vector[Entry] => Vector[Entry]): Int = {
     Files.createDirectories(metaDir(table))
     var attempts = 0
@@ -501,12 +476,9 @@ object Snapshots {
       val cur = current(table)
       val next = cur.map(_.version + 1).getOrElse(1)
       val entries = evolve(cur.map(_.entries).getOrElse(Vector.empty))
-      val schema = (cur.flatMap(_.schema), staged) match {
-        case (Some(a), Some(b)) => Some(unionSchema(a, b))
-        case (a, b) => b.orElse(a)
-      }
-      val body = (Seq(CommittedAtHeader + System.currentTimeMillis()) ++
-        schema.map(s => SchemaHeader + s.json).toSeq ++
+      val schema = cur.flatMap(_.schema).fold(staged)(unionSchema(_, staged))
+      val body = (Seq(CommittedAtHeader + System.currentTimeMillis(),
+        SchemaHeader + schema.json) ++
         entries.map { e =>
           e.stats.fold(s"${e.hour}\t${e.file}")(
             st => s"${e.hour}\t${e.file}\t${FileStats.encode(st)}")
@@ -520,6 +492,35 @@ object Snapshots {
       }
     }
     -1 // unreachable
+  }
+
+  /** The manifest rule of every rewrite commit ([[compactHour]],
+    * [[compactSmallFiles]], [[recluster]], [[mergeUpsert]]): the rewrite
+    * planned against ONE pinned snapshot and read its `read` entries; the
+    * commit is `prev − read + staged`. Entries committed concurrently
+    * between the pinned read and the commit carry forward — dropping whole
+    * hours instead would silently lose an append that landed in a hour
+    * the rewrite touched.
+    *
+    * Conflict validation (Iceberg `rewrite_data_files` semantics): every
+    * file the rewrite read must still be live. A concurrent rewrite that
+    * replaced one of them has already superseded its rows — re-adding our
+    * staged copy would resurrect the old versions alongside the new ones.
+    * The commit aborts instead, writing no manifest; the caller re-runs
+    * against the new snapshot (the staged files are orphans that
+    * [[removeOrphans]] reclaims).
+    */
+  private[lake] def commitRewrite(table: String, op: String, read: Seq[Entry],
+      staged: Vector[Entry], schema: org.apache.spark.sql.types.StructType): Int = {
+    val readFiles = read.iterator.map(_.file).toSet
+    commit(table, schema) { prev =>
+      val gone = readFiles -- prev.iterator.map(_.file)
+      if (gone.nonEmpty)
+        sys.error(s"$op conflict at $table: ${gone.size} file(s) read by " +
+          s"this rewrite were rewritten concurrently (e.g. ${gone.head}); " +
+          s"re-run $op against the current snapshot")
+      prev.filterNot(e => readFiles(e.file)) ++ staged
+    }
   }
 
   /** Append commit: new snapshot = previous files + staged files; schema
@@ -551,7 +552,7 @@ object Snapshots {
           .sortWithinPartitions(clusterBy.map(col): _*)
       }
     val staged = stage(clustered, table)
-    commit(table, Some(dataSchema(df)))(prev => prev ++ staged)
+    commit(table, dataSchema(df))(prev => prev ++ staged)
   }
 
   /** Snapshot history as a DataFrame — the metadata-table surface
@@ -577,34 +578,40 @@ object Snapshots {
   def overwritePartitions(df: DataFrame, table: String): Int = {
     val staged = stage(df, table)
     val touched = staged.map(_.hour).toSet
-    commit(table, Some(dataSchema(df)))(
+    commit(table, dataSchema(df))(
       prev => prev.filterNot(e => touched(e.hour)) ++ staged)
   }
 
-  /** Bin-pack one hour to ~targetBytes files — same rewrite as
-    * [[Lake.compactHour]], but the swap is one atomic snapshot commit and
-    * concurrent pinned readers keep their file set.
+  /** Bin-pack one hour to ~targetBytes files — the [[Lake.compactHour]]
+    * rewrite, committed by [[commitRewrite]]: one atomic snapshot swap,
+    * and concurrent pinned readers keep their file set.
     */
   def compactHour(spark: SparkSession, table: String, hour: String,
       targetBytes: Long = 128L * 1024 * 1024): Int = {
-    val part = readHours(spark, table, Set(hour))
-    val bytes = part.queryExecution.optimizedPlan.stats.sizeInBytes
-    val files = math.max(1, (BigDecimal(bytes) / targetBytes)
-      .setScale(0, BigDecimal.RoundingMode.CEILING).toInt)
-    val compacted = part.repartition(files).drop(Lake.PartitionCol)
-    val staged = stage(compacted, table)
-    commit(table, Some(dataSchema(compacted)))(
-      prev => prev.filterNot(_.hour == hour) ++ staged)
+    val snap = pin(table)
+    val read = snap.entries.filter(_.hour == hour)
+    val part = readEntries(spark, table, read, snap.schema)
+    val compacted = part.repartition(binPackFiles(part, targetBytes))
+      .drop(Lake.PartitionCol)
+    commitRewrite(table, "compactHour", read, stage(compacted, table),
+      dataSchema(compacted))
   }
+
+  /** Output file count that packs `df` into files of ~targetBytes. */
+  private[lake] def binPackFiles(df: DataFrame, targetBytes: Long): Int =
+    math.max(1, (BigDecimal(df.queryExecution.optimizedPlan.stats.sizeInBytes) /
+      targetBytes).setScale(0, BigDecimal.RoundingMode.CEILING).toInt)
 
   /** Lake maintenance: bin-pack EVERY fragmented hour — more live data
     * files than `maxFilesPerHour`, the small-file debt that micro-batch
     * appends accrue (each streaming commit writes ≥1 file per touched
     * hour, so a day of 1-minute batches leaves ~1440 tiny files per hour)
     * — in ONE atomic commit: the Iceberg `rewrite_data_files` maintenance
-    * action on this facade. Untouched hours carry forward with no data
-    * movement; pinned readers keep their file set (rewrites never delete
-    * data files — [[expireSnapshots]] reclaims the replaced ones later).
+    * action on this facade, committed by [[commitRewrite]]. Untouched
+    * hours, and files appended to a fragmented hour after the rewrite
+    * read it, carry forward with no data movement; pinned readers keep
+    * their file set (rewrites never delete data files —
+    * [[expireSnapshots]] reclaims the replaced ones later).
     * The rewrite range-clusters on the hour so each staged task writes a
     * contiguous hour range rather than one file into every hour dir (the
     * wide-merge lesson — see [[mergeUpsert]]).
@@ -615,30 +622,30 @@ object Snapshots {
   def compactSmallFiles(spark: SparkSession, table: String,
       maxFilesPerHour: Int = 4,
       targetBytes: Long = 128L * 1024 * 1024): Int = {
-    val cur = current(table).getOrElse(sys.error(s"no snapshot committed at $table"))
-    val frag = cur.entries.groupBy(_.hour)
+    val snap = pin(table)
+    val frag = snap.entries.groupBy(_.hour)
       .collect { case (h, es) if es.size > maxFilesPerHour => h }.toSet
-    if (frag.isEmpty) return cur.version
-    val part = readHours(spark, table, frag)
-    val bytes = part.queryExecution.optimizedPlan.stats.sizeInBytes
-    val files = math.max(1, (BigDecimal(bytes) / targetBytes)
-      .setScale(0, BigDecimal.RoundingMode.CEILING).toInt)
+    if (frag.isEmpty) return snap.version
+    val read = snap.entries.filter(e => frag(e.hour))
+    val part = readEntries(spark, table, read, snap.schema)
     val compacted = part
-      .repartitionByRange(files, col(Lake.PartitionCol))
+      .repartitionByRange(binPackFiles(part, targetBytes), col(Lake.PartitionCol))
       .drop(Lake.PartitionCol)
-    val staged = stage(compacted, table)
-    commit(table, Some(dataSchema(compacted)))(
-      prev => prev.filterNot(e => frag(e.hour)) ++ staged)
+    commitRewrite(table, "compactSmallFiles", read, stage(compacted, table),
+      dataSchema(compacted))
   }
 
-  /** Key-based MERGE INTO as ONE atomic commit (vs [[Lake.mergeUpsert]]'s
-    * two visible writes): rewritten matched partitions and inserted rows
-    * become visible together, or not at all. Only partitions containing
-    * matched keys are rewritten; the broadcast of the update side is
-    * size-gated (backfill-scale updates fall back to a shuffle join under
-    * AQE).
-    */
-  /** @param clusterBy range-cluster the staged insert AND rewrite files
+  /** Key-based MERGE INTO as ONE atomic commit: rewritten matched
+    * partitions and inserted rows become visible together, or not at all.
+    * Only partitions containing matched keys are rewritten, each row in
+    * its original hour (an update whose `ts` re-derives another hour does
+    * not move it — cross-partition moves are delete+insert, as in
+    * Iceberg). The key probe and the rewrite read one pinned snapshot, and
+    * the commit follows [[commitRewrite]]. The broadcast of the update
+    * side is size-gated (backfill-scale updates fall back to a shuffle
+    * join under AQE).
+    *
+    * @param clusterBy range-cluster the staged insert AND rewrite files
     *   on these columns (the [[append]] clustering applied to merge
     *   commits) — what keeps a keyed registry's files [[readKeyProbe]]-
     *   prunable as it grows through per-batch upserts. Wide merges
@@ -663,7 +670,20 @@ object Snapshots {
     * collected sample is pk values only, so the driver footprint is
     * bounded by SmallMergeRows keys.
     */
-  private val SmallMergeRows = 4096
+  private[graft] val SmallMergeRows = 4096
+
+  /** Iceberg's MERGE cardinality rule: multiple source rows per key would
+    * silently multiply matched target rows through the merge join. A
+    * collected pk sample is checked in memory (nulls collide, as in a
+    * groupBy); without one, a job looks for a duplicated key.
+    */
+  private def requireUniquePk(updates: DataFrame, pk: String,
+      pkSample: Option[Array[Any]]): Unit = {
+    val dup = pkSample.fold(!updates.groupBy(col(pk)).count()
+      .filter(col("count") > 1).limit(1).isEmpty)(s => s.distinct.length != s.length)
+    if (dup) throw new IllegalArgumentException(
+      s"mergeUpsert: updates contain duplicate values of primary key '$pk'")
+  }
 
   private def mergeUpsertImpl(spark: SparkSession, table: String,
       updates: DataFrame, pk: String, clusterBy: Seq[String]): Int = {
@@ -680,38 +700,26 @@ object Snapshots {
       } else if (wide)
         Lake.withHourPartition(df).repartitionByRange(col(Lake.PartitionCol))
       else df
-    def dbg[A](name: String)(f: => A): A =
-      if (!sys.env.contains("GRAFT_MERGE_DEBUG")) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[merge-dbg] $name%-14s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        r
-      }
     // SMALL-UPDATE FAST PATH: the per-batch streaming/fold upsert is a
-    // handful of rows, and the generic path below pays FOUR driver
-    // actions (pk-uniqueness job, match-probe collect, insert anti-join
-    // emptiness probe, plus the rewrite) to reach one commit — measured
-    // at ~1.2-1.7 s of pure job floors on a 5-row update (profile-fold).
-    // When the update pk set fits a driver threshold, ONE limited
-    // collect of the pk column replaces the pk job AND the anti-join:
-    // duplicates are checked in memory (same error contract as
-    // requireUniquePk, nulls collide like a groupBy), matched
-    // (partition, pk) pairs come from one isin-pruned lake probe, and
-    // the insert set is the update frame filtered by the collected
-    // matched-pk set — the rewrite's stage write is then the only
-    // remaining corpus-touching job. Results are identical by
-    // construction; SnapshotsSpec's merge semantics run on this path at
-    // spec scale.
+    // handful of rows, and the generic path pays FOUR driver actions
+    // (pk-uniqueness job, match-probe collect, insert anti-join emptiness
+    // probe, plus the rewrite) to reach one commit — measured at
+    // ~1.2-1.7 s of pure job floors on a 5-row update (profile-fold).
+    // When the update pk set fits a driver threshold, ONE limited collect
+    // of the pk column replaces the pk job AND the anti-join: duplicates
+    // are checked in memory (nulls collide like a groupBy), matched
+    // (partition, pk) pairs come from one isin-pruned lake probe, and the
+    // insert set is the update frame filtered by the collected matched-pk
+    // set — the rewrite's stage write is then the only remaining
+    // corpus-touching job. The two paths differ only in how they find the
+    // touched hours and the insert set; SnapshotsSpec checks that both
+    // give the same table.
     val pkSample = updates.select(col(pk))
       .limit(SmallMergeRows + 1).collect().map(_.get(0))
     val small = pkSample.length <= SmallMergeRows
-    if (small) {
-      if (pkSample.distinct.length != pkSample.length)
-        throw new IllegalArgumentException(
-          s"mergeUpsert: updates contain duplicate values of primary key '$pk'")
-    } else dbg("pk_check")(Lake.requireUniquePk(updates, pk))
-    val lake = read(spark, table)
+    requireUniquePk(updates, pk, Some(pkSample).filter(_ => small))
+    val snap = pin(table)
+    val lake = readEntries(spark, table, snap.entries, snap.schema)
     // schema contract FIRST (before any staging I/O): a type-conflicting
     // update — including a pk whose type differs from the lake's — is
     // rejected loudly here ("explicit casting is required"). Past this
@@ -726,95 +734,73 @@ object Snapshots {
     val renamed = updates.columns.foldLeft(updates)(
       (d, c) => d.withColumnRenamed(c, "__u_" + c))
     val gated = Lake.sizeGatedBroadcast(renamed)
-    if (small) {
-      val pks = pkSample.filter(_ != null).toSet
-      val matchedRows =
-        if (pks.isEmpty) Array.empty[org.apache.spark.sql.Row]
-        else dbg("touched")(lake
-          .filter(col(pk).isInCollection(pks))
-          .select(col(Lake.PartitionCol), col(pk)).distinct().collect())
-      val touched = matchedRows.map(_.getString(0)).toSet
-      val matchedPks = matchedRows.map(_.get(1)).toSet
-      val stagedRewrites =
-        if (touched.isEmpty) Vector.empty
-        else {
-          val affected = readHours(spark, table, touched)
-          val updatedCols = updates.columns.filterNot(_ == pk)
-          val rewritten0 = updatedCols.foldLeft(
-              affected.join(gated, col(pk) === col("__u_" + pk), "left")) {
-              (d, c) => d.withColumn(c, coalesce(col("__u_" + c), col(c)))
-            }
-            .drop(updates.columns.map("__u_" + _).toIndexedSeq: _*)
-          val rewritten = clusterStaged(rewritten0,
-            wide = touched.size > spark.sessionState.conf.numShufflePartitions)
-          dbg("stage_rewrite")(stage(rewritten, table))
-        }
-      // insert existence and membership are known DRIVER-SIDE: a null
-      // pk never equi-matches (kept as insert, mirroring the anti-join);
-      // Scala == across the two collected sides is sound because the
-      // schema check above guarantees identical pk column types
-      val nInserts = pkSample.count(v => v == null || !matchedPks(v))
-      val stagedInserts =
-        if (nInserts == 0) Vector.empty
-        else {
+    val matched =
+      if (small) None
+      else Some(lake.join(gated, col(pk) === col("__u_" + pk))
+        .select(col(Lake.PartitionCol), col(pk)).distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    try {
+      // (touched hours, the insert frame when it holds rows)
+      val (touched, inserts) = matched match {
+        case None =>
+          val pks = pkSample.filter(_ != null).toSet
+          val matchedRows =
+            if (pks.isEmpty) Array.empty[org.apache.spark.sql.Row]
+            else lake.filter(col(pk).isInCollection(pks))
+              .select(col(Lake.PartitionCol), col(pk)).distinct().collect()
+          val matchedPks = matchedRows.map(_.get(1)).toSet
+          // insert existence and membership are known DRIVER-SIDE: a null
+          // pk never equi-matches (kept as insert, mirroring the
+          // anti-join); Scala == across the two collected sides is sound
+          // because the schema check above guarantees identical pk types
           val insertDf =
             if (matchedPks.isEmpty) updates
-            else updates.filter(col(pk).isNull ||
-              !col(pk).isInCollection(matchedPks))
-          dbg("stage_insert")(stage(clusterStaged(insertDf, wide = false),
-            table))
-        }
-      return commit(table, Some(merged))(prev =>
-        prev.filterNot(e => touched(e.hour)) ++ stagedRewrites ++ stagedInserts)
-    }
-    val matched = lake.join(gated, col(pk) === col("__u_" + pk))
-      .select(col(Lake.PartitionCol), col(pk)).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val touched = dbg("touched")(matched.select(col(Lake.PartitionCol)).distinct()
-        .collect().map(_.getString(0)).toSet)
+            else updates.filter(col(pk).isNull || !col(pk).isInCollection(matchedPks))
+          (matchedRows.map(_.getString(0)).toSet,
+            Some(insertDf).filter(_ => pkSample.exists(v => v == null || !matchedPks(v))))
+        case Some(m) =>
+          val touched = m.select(col(Lake.PartitionCol)).distinct()
+            .collect().map(_.getString(0)).toSet
+          val antiJoined = renamed.join(m.select(col(pk)).distinct(),
+            col("__u_" + pk) === col(pk), "left_anti")
+          val insertDf = updates.columns.foldLeft(antiJoined)(
+            (d, c) => d.withColumnRenamed("__u_" + c, c))
+          (touched, Some(insertDf).filterNot(_.isEmpty))
+      }
+      // WIDE merges (history-scale backfills touching hundreds of hour
+      // partitions): without clustering, EVERY staging task opens a parquet
+      // file in every touched hour — tasks × hours tiny files, and one
+      // task's file fan-out becomes a flat multi-second straggler
+      // regardless of data size (measured in SCALING.md). Range-partitioning
+      // on the hour gives staged tasks disjoint hour ranges, at the cost of
+      // one shuffle of the staged rows; narrow merges (the common streaming
+      // case) keep the no-shuffle path.
+      val wide = touched.size > spark.sessionState.conf.numShufflePartitions
+      val read = snap.entries.filter(e => touched(e.hour))
       // insert-only merges (no key matched — the bootstrap case) must not
       // plan a zero-path read: short-circuit the whole rewrite branch
       val stagedRewrites =
-        if (touched.isEmpty) Vector.empty
+        if (read.isEmpty) Vector.empty
         else {
-          val affected = readHours(spark, table, touched)
+          val affected = readEntries(spark, table, read, snap.schema)
           val updatedCols = updates.columns.filterNot(_ == pk)
-          val rewritten0 = updatedCols.foldLeft(
+          val rewritten = updatedCols.foldLeft(
               affected.join(gated, col(pk) === col("__u_" + pk), "left")) {
               (d, c) => d.withColumn(c, coalesce(col("__u_" + c), col(c)))
             }
             .drop(updates.columns.map("__u_" + _).toIndexedSeq: _*)
-          // WIDE merges (history-scale backfills touching hundreds of hour
-          // partitions): without clustering, EVERY staging task opens a
-          // parquet file in every touched hour — tasks × hours tiny files,
-          // and one task's file fan-out becomes a flat multi-second
-          // straggler regardless of data size (measured in SCALING.md).
-          // Range-partitioning on the hour gives staged tasks disjoint
-          // hour ranges, at the cost of one shuffle of the rewritten rows;
-          // narrow merges (the common streaming case) keep the
-          // no-shuffle path.
-          val rewritten = clusterStaged(rewritten0,
-            wide = touched.size > spark.sessionState.conf.numShufflePartitions)
-          dbg("stage_rewrite")(stage(rewritten, table))
+          stage(clusterStaged(rewritten, wide), table)
         }
-      val inserts = renamed.join(matched.select(col(pk)).distinct(),
-          col("__u_" + pk) === col(pk), "left_anti")
-      val insertDf0 = updates.columns.foldLeft(inserts)(
-        (d, c) => d.withColumnRenamed("__u_" + c, c))
-      // same wide-merge clustering as the rewrite branch: a history-scale
-      // insert set spans hundreds of hours, and the persisted update frame
-      // can coalesce to a handful of cached partitions — without the range
-      // shuffle ONE task then writes a file into every hour (measured as a
-      // 158 s single-task stage at 10x scale, SCALING.md)
-      val insertDf = clusterStaged(insertDf0,
-        wide = touched.size > spark.sessionState.conf.numShufflePartitions)
-      val stagedInserts =
-        if (dbg("insert_empty?")(insertDf.isEmpty)) Vector.empty
-        else dbg("stage_insert")(stage(insertDf, table))
-      commit(table, Some(merged))(prev =>
-        prev.filterNot(e => touched(e.hour)) ++ stagedRewrites ++ stagedInserts)
-    } finally matched.unpersist()
+      // a history-scale insert set spans hundreds of hours, and the
+      // persisted update frame can coalesce to a handful of cached
+      // partitions — without the hour clustering ONE task then writes a
+      // file into every hour (measured as a 158 s single-task stage at 10x
+      // scale, SCALING.md); the fast path's inserts are a few rows, never
+      // hour-clustered
+      val stagedInserts = inserts.fold(Vector.empty[Entry])(
+        df => stage(clusterStaged(df, wide && !small), table))
+      commitRewrite(table, "mergeUpsert", read, stagedRewrites ++ stagedInserts, merged)
+    } finally matched.foreach(_.unpersist())
   }
 
   // ---- maintenance ---------------------------------------------------------

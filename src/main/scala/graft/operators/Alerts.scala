@@ -15,7 +15,9 @@ import org.apache.spark.sql.types.StringType
   * alert's `first_matched_at`, else it starts a new alert. An alert
   * activates when its match count reaches `threshold`; `created_at` is the
   * time of the match that crossed it (retroactively covering earlier
-  * matches — the reference's retro-activation flips rows already written).
+  * matches — the reference's retro-activation flips rows already written;
+  * on the lake that is one [[graft.lake.Snapshots.mergeUpsert]] on
+  * `alert_id`, as q81_alerts_retro_lake commits it).
   *
   * The anchored-window grouping is inherently sequential per key (each
   * boundary depends on the previous anchor), so it cannot be a plain window
@@ -100,33 +102,5 @@ object Alerts {
     import spark.implicits._
     AnchoredSession.fold(spark, matches, col("rule_name").cast(StringType),
       col("dedupe").cast(StringType), cfg).as[AlertRow]
-  }
-
-  /** Retro-activation (reference matano_alerts.rs:309-444): when a late
-    * match pushes an alert over its threshold, rows already committed for
-    * that alert must flip `activated`/`created_at`. With an Iceberg catalog
-    * this is `MERGE INTO ... WHEN MATCHED UPDATE`; here it rewrites only
-    * the hour partitions containing touched alert ids — read back the
-    * affected partitions, overwrite the flagged columns from the fresh
-    * aggregate, dynamic-partition-overwrite them. Partitions not touched
-    * by any updated alert are never rewritten.
-    */
-  def applyRetroActivation(spark: SparkSession, lakePath: String,
-      updated: DataFrame): Unit = {
-    import graft.lake.Lake
-    val fresh = updated.select(
-      col("alert_id").as("__id"), col("activated").as("__activated"),
-      col("created_at").as("__created_at"), col("match_count").as("__match_count"))
-    val lake = Lake.read(spark, lakePath)
-    val touchedHours = lake.join(broadcast(fresh), col("alert_id") === col("__id"))
-      .select(col(Lake.PartitionCol)).distinct()
-    val affected = lake.join(broadcast(touchedHours), Seq(Lake.PartitionCol))
-    val rewritten = affected.join(broadcast(fresh),
-        col("alert_id") === col("__id"), "left")
-      .withColumn("activated", coalesce(col("__activated"), col("activated")))
-      .withColumn("created_at", coalesce(col("__created_at"), col("created_at")))
-      .withColumn("match_count", coalesce(col("__match_count"), col("match_count")))
-      .drop("__id", "__activated", "__created_at", "__match_count", Lake.PartitionCol)
-    Lake.overwritePartitions(rewritten, lakePath)
   }
 }

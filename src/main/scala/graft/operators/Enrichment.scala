@@ -131,15 +131,4 @@ object Enrichment {
       write: DataFrame => Unit): (DataFrame, Long) => Unit =
     (batch: DataFrame, _: Long) =>
       write(lookupJoin(batch, refresher.get(batch.sparkSession), eventKey, lookupKey, as))
-
-  /** MERGE upsert for enrichment tables with a primary key (reference J2,
-    * Enrichment.kt:305-324: `MERGE INTO main USING temp ON pk WHEN MATCHED
-    * UPDATE WHEN NOT MATCHED INSERT`). Without an Iceberg catalog this is
-    * the equivalent dataframe form: updates win on key collision, existing
-    * rows otherwise retained. Schemas must match.
-    */
-  def mergeUpsert(existing: DataFrame, updates: DataFrame, pk: String): DataFrame = {
-    val retained = existing.join(updates.select(col(pk)), Seq(pk), "left_anti")
-    retained.unionByName(updates)
-  }
 }

@@ -7,9 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** Phase profiler for the q81 retro pipeline (the SCALING.md merge
   * investigation): times fold / append / re-fold / merge / read
-  * separately with per-phase max-task tracking. Set GRAFT_MERGE_DEBUG=1
-  * to additionally break the merge into its internal actions
-  * (Snapshots.mergeUpsertImpl's dbg hooks).
+  * separately with per-phase max-task tracking. The merge is one phase;
+  * its internal actions show as separate jobs in the Spark UI.
   *
   * {{{ runMain graft.tools.DevRetro [sfDir] }}}
   */

@@ -63,38 +63,6 @@ class AlertsSpec extends SparkSpec {
     assert(b.toSet == s.toSet)
   }
 
-  test("retro-activation rewrites only partitions containing the alert") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val tmp = tempDir("graft_lake").toString
-    // three hours of committed alert rows; alert "a1" spans hours 0 and 1,
-    // alert "zz" lives alone in hour 2
-    val rows = Seq(
-      ("a1", java.sql.Timestamp.valueOf("2024-01-01 00:10:00"), false, 1L),
-      ("a1", java.sql.Timestamp.valueOf("2024-01-01 01:10:00"), false, 2L),
-      ("zz", java.sql.Timestamp.valueOf("2024-01-01 02:10:00"), false, 1L)
-    ).toDF("alert_id", "ts", "activated", "match_count")
-      .withColumn("created_at", lit(null).cast("timestamp"))
-    graft.lake.Lake.append(rows, tmp)
-    val before = new java.io.File(s"$tmp/ts_hour=2024-01-01-02").listFiles()
-      .map(_.getName).filter(_.endsWith(".parquet")).toSet
-
-    val updated = Seq(("a1", true, 5L)).toDF("alert_id", "activated", "match_count")
-      .withColumn("created_at", lit(java.sql.Timestamp.valueOf("2024-01-01 01:10:00")))
-    Alerts.applyRetroActivation(spark, tmp, updated)
-
-    val after = graft.lake.Lake.read(spark, tmp)
-    val a1 = after.filter(col("alert_id") === "a1").collect()
-    assert(a1.length == 2 && a1.forall(_.getAs[Boolean]("activated")))
-    assert(a1.forall(_.getAs[Long]("match_count") == 5L))
-    val zz = after.filter(col("alert_id") === "zz").head
-    assert(!zz.getAs[Boolean]("activated"))
-    // the untouched hour partition kept its original files (not rewritten)
-    val afterFiles = new java.io.File(s"$tmp/ts_hour=2024-01-01-02").listFiles()
-      .map(_.getName).filter(_.endsWith(".parquet")).toSet
-    assert(afterFiles == before)
-  }
-
   test("flip-after-commit: late matches activate an already-committed alert in one snapshot commit") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -111,6 +79,14 @@ class AlertsSpec extends SparkSpec {
     val committed = Snapshots.read(spark, tmp).collect()
     assert(committed.length == 1 && !committed.head.getAs[Boolean]("activated"))
     val committedId = committed.head.getAs[String]("alert_id")
+    // a bystander alert in another hour, which no late match touches
+    val bystander = graft.plans.AnchoredSession.aggregate(spark,
+      Seq(("error_burst", "u2", 9L, java.sql.Timestamp.valueOf("2024-01-01 05:00:00")))
+        .toDF("rule_name", "dedupe", "match_id", "ts"), cfg)
+    Snapshots.append(bystander.withColumn("ts", col("first_matched_at")), tmp)
+    val bystanderId = bystander.head.getAs[String]("alert_id")
+    def hourFiles(v: Int) = Snapshots.snapshot(tmp, v).entries
+      .filter(_.hour == "2024-01-01-05").map(_.file).toSet
     val v1 = Snapshots.currentVersion(tmp).get
     // phase 2: a late match inside the window crosses the threshold, plus
     // one far outside it (a brand-new alert) — both land in ONE commit
@@ -121,9 +97,13 @@ class AlertsSpec extends SparkSpec {
       retro.withColumn("ts", col("first_matched_at")), "alert_id")
     // exactly one commit (atomic: flip + insert are never separately visible)
     assert(Snapshots.currentVersion(tmp).get == v1 + 1)
-    val after = Snapshots.read(spark, tmp).collect()
+    // only touched hours are rewritten: the bystander's hour keeps its files
+    assert(hourFiles(v1).nonEmpty && hourFiles(v1 + 1) == hourFiles(v1))
+    val all = Snapshots.read(spark, tmp).collect()
       .map(r => r.getAs[String]("alert_id") ->
         (r.getAs[Boolean]("activated"), r.getAs[Long]("match_count"))).toMap
+    assert(all(bystanderId) == ((false, 1L)))
+    val after = all - bystanderId
     assert(after.size == 2)
     // the committed row FLIPPED in place: same alert_id, now activated, count 2
     assert(after(committedId) == ((true, 2L)))

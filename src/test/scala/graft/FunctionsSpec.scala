@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{AlertContext, Enrichment}
+import graft.operators.AlertContext
 import graft.transform.TransformDsl
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
@@ -37,10 +37,15 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("enrichment mergeUpsert: updates win, unmatched rows survive") {
-    val main = Seq(("k1", "old1"), ("k2", "old2")).toDF("pk", "v")
-    val temp = Seq(("k2", "new2"), ("k3", "new3")).toDF("pk", "v")
-    val out = Enrichment.mergeUpsert(main, temp, "pk")
-      .orderBy("pk").collect()
+    import graft.lake.{Lake, Snapshots}
+    // an enrichment dim in one constant partition, as EnrichmentYaml's
+    // merge write mode commits it (reference Enrichment.kt:305-324)
+    val t = tempDir("enrich_merge").toString
+    def dim(rows: (String, String)*) =
+      rows.toDF("pk", "v").withColumn(Lake.PartitionCol, lit("static"))
+    Snapshots.append(dim(("k1", "old1"), ("k2", "old2")), t)
+    Snapshots.mergeUpsert(spark, t, dim(("k2", "new2"), ("k3", "new3")), "pk")
+    val out = Snapshots.read(spark, t).select("pk", "v").orderBy("pk").collect()
     assert(out.toSeq == Seq(Row("k1", "old1"), Row("k2", "new2"), Row("k3", "new3")))
   }
 

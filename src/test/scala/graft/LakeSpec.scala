@@ -70,11 +70,12 @@ class LakeSpec extends SparkSpec {
 
   test("Lake.read: an evolveAppend-widened table reads the footer Spark's inference reads") {
     // the widened file sorts last (a later hour), first (an earlier hour),
-    // and beside the narrow one in the same hour
+    // and beside the narrow one in the same hour; the wide append carries
+    // every column the table has, so a plain append widens the table
     for ((name, wideHours) <- Seq("later" -> Seq(9), "earlier" -> Seq(6), "same" -> Seq(7))) {
       val tmp = tempDir(s"graft_read_evolve_$name").toString
-      Lake.evolveAppend(spark, hourRows(Seq(7, 8)), tmp)
-      Lake.evolveAppend(spark, hourRows(wideHours, extra = true), tmp)
+      Lake.append(hourRows(Seq(7, 8)), tmp)
+      Lake.append(hourRows(wideHours, extra = true), tmp)
       assertReadParity(tmp)
     }
   }
@@ -101,70 +102,6 @@ class LakeSpec extends SparkSpec {
     assert(out.count() == 3)
     assert(out.select("record").as[String].collect().sorted.toSeq == Seq("r1", "r2", "r3"))
     assert(out.columns.contains("path"))
-  }
-
-  test("evolveAppend: new columns appear, old rows read null, old columns null-fill") {
-    import graft.lake.Lake
-    val dir = tempDir("graft_evolve").toString
-    val v1 = Seq((1L, "a")).toDF("id", "name")
-      .withColumn("ts", lit(java.sql.Timestamp.valueOf("2024-01-01 00:10:00")))
-    Lake.append(v1, dir)
-    // v2 adds `score`, drops `name` (the reference's unionByNameWith)
-    val v2 = Seq((2L, 9.5)).toDF("id", "score")
-      .withColumn("ts", lit(java.sql.Timestamp.valueOf("2024-01-01 01:10:00")))
-    Lake.evolveAppend(spark, v2, dir)
-    val out = Lake.readEvolved(spark, dir).orderBy("id")
-    assert(out.columns.toSet == Set("id", "name", "score", "ts", Lake.PartitionCol))
-    val rows = out.select("id", "name", "score").collect()
-    assert(rows(0).getLong(0) == 1L && rows(0).getString(1) == "a" && rows(0).isNullAt(2))
-    assert(rows(1).getLong(0) == 2L && rows(1).isNullAt(1) && rows(1).getDouble(2) == 9.5)
-  }
-
-  test("lake mergeUpsert: matched keys update in place, new keys insert") {
-    import graft.lake.Lake
-    import org.apache.spark.sql.functions.col
-    val dir = tempDir("graft_merge").toString
-    val base = Seq(
-      (1L, "old1", java.sql.Timestamp.valueOf("2024-01-01 00:10:00")),
-      (2L, "old2", java.sql.Timestamp.valueOf("2024-01-01 01:10:00")),
-      (3L, "keep", java.sql.Timestamp.valueOf("2024-01-01 02:10:00"))
-    ).toDF("id", "v", "ts")
-    Lake.append(base, dir)
-    val before = new java.io.File(s"$dir/ts_hour=2024-01-01-02")
-      .listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
-    val updates = Seq(
-      (1L, "new1", java.sql.Timestamp.valueOf("2024-01-01 00:10:00")), // matched
-      (9L, "ins9", java.sql.Timestamp.valueOf("2024-01-01 03:10:00"))  // insert
-    ).toDF("id", "v", "ts")
-    Lake.mergeUpsert(spark, dir, updates, "id")
-    val out = Lake.read(spark, dir).orderBy("id")
-    assert(out.select("id", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      == Seq((1L, "new1"), (2L, "old2"), (3L, "keep"), (9L, "ins9")))
-    // the untouched hour partition kept its original files
-    val after = new java.io.File(s"$dir/ts_hour=2024-01-01-02")
-      .listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
-    assert(after == before)
-  }
-
-  test("lake mergeUpsert: an update whose ts re-derives another hour cannot nuke it") {
-    import graft.lake.Lake
-    import org.apache.spark.sql.functions.col
-    val dir = tempDir("graft_merge_mv").toString
-    Lake.append(Seq(
-      (1L, "old1", java.sql.Timestamp.valueOf("2024-01-01 00:10:00")),
-      (2L, "bystander", java.sql.Timestamp.valueOf("2024-01-01 02:10:00"))
-    ).toDF("id", "v", "ts"), dir)
-    // key 1's update carries a ts INSIDE hour 02 — the bystander's hour;
-    // the row must stay in its original partition, hour 02 untouched
-    Lake.mergeUpsert(spark, dir,
-      Seq((1L, "new1", java.sql.Timestamp.valueOf("2024-01-01 02:30:00")))
-        .toDF("id", "v", "ts"), "id")
-    val out = Lake.read(spark, dir)
-    assert(out.count() == 2)
-    assert(out.filter(col("id") === 2L).select("v").head.getString(0) == "bystander")
-    val k1 = out.filter(col("id") === 1L).head
-    assert(k1.getAs[String]("v") == "new1")
-    assert(k1.getAs[String](graft.lake.Lake.PartitionCol) == "2024-01-01-00") // original hour
   }
 
   test("fast minhash (xxhash64) is deterministic and seed-sensitive") {

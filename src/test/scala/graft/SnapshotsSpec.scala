@@ -74,7 +74,7 @@ class SnapshotsSpec extends SparkSpec {
   test("schema evolution: appends with new columns union-evolve the manifest schema") {
     val t = tempDir("snap_evo").toString
     Snapshots.append(mkRows(1 to 5, "2024-03-01 05"), t)
-    // second commit adds `score`, drops nothing — the evolveAppend shape
+    // second commit adds `score`, drops nothing — the unionByNameWith shape
     val withScore = (6 to 8).map(i => (i.toLong, s"v$i", ts("2024-03-01 06:10:00"), i * 1.5))
       .toDF("id", "name", "ts", "score")
     Snapshots.append(withScore, t)
@@ -86,14 +86,16 @@ class SnapshotsSpec extends SparkSpec {
     assert(out.filter(col("score").isNotNull).count() == 3)
     // a reader pinned to v1 still sees v1's schema — no `score`
     assert(!Snapshots.read(spark, t, version = Some(1)).columns.contains("score"))
-    // and matches what Lake.evolveAppend produces for the same sequence
-    val lakeDir = tempDir("snap_evo_lake").toString
-    Lake.evolveAppend(spark, mkRows(1 to 5, "2024-03-01 05"), lakeDir)
-    Lake.evolveAppend(spark, withScore, lakeDir)
-    val viaLake = Lake.readEvolved(spark, lakeDir)
-      .select("id", "name", "score").orderBy("id").collect().toSeq
-    val viaSnap = out.select("id", "name", "score").orderBy("id").collect().toSeq
-    assert(viaSnap == viaLake)
+    // a third commit drops `name`: the table keeps it, old rows keep their
+    // names, and the new row reads null there
+    Snapshots.append(Seq((9L, ts("2024-03-01 07:10:00"), 9.5)).toDF("id", "ts", "score"), t)
+    val evolved = Snapshots.read(spark, t)
+    assert(evolved.columns.toSeq == Seq("id", "name", "ts", "score", Lake.PartitionCol))
+    val expected = (1 to 5).map(i => (i.toLong, Option(s"v$i"), Option.empty[Double])) ++
+      (6 to 8).map(i => (i.toLong, Option(s"v$i"), Option(i * 1.5))) :+
+      ((9L, Option.empty[String], Option(9.5)))
+    assert(evolved.select("id", "name", "score").as[(Long, Option[String], Option[Double])]
+      .collect().sortBy(_._1).toSeq == expected)
   }
 
   test("schema evolution survives overwrite and a subset-column append") {
@@ -285,13 +287,83 @@ class SnapshotsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Snapshots.mergeUpsert(spark, t, dup, "id")
     }
-    // both merge entry points share the cardinality guard — Lake.mergeUpsert
-    // must reject the same bad input rather than multiplying matched rows
-    val t2 = tempDir("lake_dup").toString
-    Lake.append(mkRows(1 to 5, "2024-03-01 05"), t2)
+    // above the fast path's threshold the generic path checks with a job,
+    // and must reject one duplicate as well
+    val bigDup = mkRows(1 to Snapshots.SmallMergeRows + 1, "2024-03-01 05")
+      .union(Seq((3L, "c", ts("2024-03-01 05:10:00"))).toDF("id", "name", "ts"))
     intercept[IllegalArgumentException] {
-      Lake.mergeUpsert(spark, t2, dup, "id")
+      Snapshots.mergeUpsert(spark, t, bigDup, "id")
     }
+    assert(Snapshots.currentVersion(t).contains(1), "no commit")
+  }
+
+  test("mergeUpsert: the fast path and the generic path give the same table " +
+      "and touched-hour entries; a matched row keeps its hour") {
+    // hours 00, 01 and 02 hold ids 1-10, 11-20 and 21-30; hour 02 is the
+    // bystander no update matches
+    val updates = Seq(
+      (Option(5L), "UPD5", ts("2024-03-01 00:20:00")),
+      // matched, but its new ts falls in the bystander's hour
+      (Option(15L), "UPD15", ts("2024-03-01 02:30:00")),
+      (Option(100L), "NEW100", ts("2024-03-01 03:10:00")),
+      (Option.empty[Long], "NULLPK", ts("2024-03-01 03:20:00"))).toDF("id", "name", "ts")
+    // inserts into hour 09 that push the update set past the fast path
+    val padding = (1000 until 1000 + Snapshots.SmallMergeRows)
+      .map(i => (Option(i.toLong), s"pad$i", ts("2024-03-01 09:10:00")))
+      .toDF("id", "name", "ts")
+    def merged(name: String, upd: org.apache.spark.sql.DataFrame) = {
+      val t = tempDir(name).toString
+      for (h <- 0 to 2) Snapshots.append(mkRows(h * 10 + 1 to h * 10 + 10, f"2024-03-01 $h%02d"), t)
+      val base = Snapshots.current(t).get
+      assert(Snapshots.mergeUpsert(spark, t, upd, "id") == base.version + 1)
+      val after = Snapshots.current(t).get
+      def files(es: Vector[Snapshots.Entry], h: String) = es.filter(_.hour == h).map(_.file).toSet
+      // the bystander keeps its files
+      assert(files(after.entries, "2024-03-01-02") == files(base.entries, "2024-03-01-02"))
+      // per changed hour (padding's aside), the rows its entries record
+      val changed = after.entries.map(_.hour).distinct
+        .filter(h => h != "2024-03-01-09" && files(after.entries, h) != files(base.entries, h))
+      val rows = Snapshots.read(spark, t).filter(!col("name").startsWith("pad"))
+        .select("id", "name", "ts", Lake.PartitionCol).collect().map(_.toSeq).toSeq
+      (changed.map(h => h -> after.entries.filter(_.hour == h).flatMap(_.stats).map(_.rows).sum).toMap,
+        rows.sortBy(_.mkString("|")))
+    }
+    val (fastHours, fastRows) = merged("snap_merge_fast", updates)
+    val (genericHours, genericRows) = merged("snap_merge_generic", updates.union(padding))
+    assert(fastHours == Map("2024-03-01-00" -> 10L, "2024-03-01-01" -> 10L, "2024-03-01-03" -> 2L))
+    assert(genericHours == fastHours)
+    assert(genericRows == fastRows)
+    assert(fastRows.size == 32)
+    val byName = fastRows.map(r => r(1) -> r).toMap
+    assert(byName("UPD5")(3) == "2024-03-01-00")
+    // UPD15 stays in its original hour; its ts is updated
+    assert(byName("UPD15")(3) == "2024-03-01-01" && byName("UPD15")(2) == ts("2024-03-01 02:30:00"))
+    assert(byName("NULLPK")(0) == null && byName("NEW100")(3) == "2024-03-01-03")
+    assert((21 to 30).forall(i => byName(s"v$i")(3) == "2024-03-01-02"))
+  }
+
+  test("the lake reads no environment variable; src/main defines mergeUpsert once") {
+    import scala.jdk.CollectionConverters._
+    def sources(dir: String) = {
+      val s = Files.walk(Paths.get(dir))
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toVector finally s.close()
+    }
+    def lines(f: java.nio.file.Path) =
+      new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8)
+        .linesIterator.zipWithIndex.map { case (l, i) => (l, s"${f.getFileName}:${i + 1}") }
+    val lake = sources("src/main/scala/graft/lake")
+    assert(lake.nonEmpty, "lake sources not found")
+    val envReads = for {
+      f <- lake; (line, at) <- lines(f)
+      word <- Seq("sys.env", "getenv") if line.contains(word)
+    } yield s"$at: $word"
+    assert(envReads.isEmpty, "the lake takes no knobs from the environment: " +
+      envReads.mkString(", "))
+    val defs = for {
+      f <- sources("src/main"); (line, at) <- lines(f)
+      if raw"\bdef mergeUpsert\b".r.findFirstIn(line).nonEmpty
+    } yield at
+    assert(defs.size == 1, s"one MERGE implementation expected: ${defs.mkString(", ")}")
   }
 
   test("compactHour preserves rows and commits atomically") {
