@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{
   Alias, AttributeReference, CreateNamedStruct, Expression, GetStructField,
   If, IsNull, JsonToStructs, KnownNotNull, Literal, NamedExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** DATA-DRIVEN Sigma field maps: correspondences extracted from a managed

@@ -357,7 +357,7 @@ object SigmaRules {
       root: JsonNode,
       fieldMap: String => String,
       keywordField: String,
-      placeholders: Map[String, Seq[String]] = Map.empty): SigmaRule = {
+      placeholders: Map[String, Seq[String]]): SigmaRule = {
     val det = root.path("detection")
     require(det.isObject, "sigma rule has no detection section")
     val rawCondition = det.path("condition") match {
@@ -842,7 +842,7 @@ object SigmaRules {
   private def compileOneValue(
       field: Column, mods: List[String], v: JsonNode,
       caseSensitive: Boolean,
-      placeholders: Map[String, Seq[String]] = Map.empty): Column = mods match {
+      placeholders: Map[String, Seq[String]]): Column = mods match {
     case Nil =>
       if (v.isNull) field.isNull
       else if (v.isNumber) field === lit(v.numberValue.toString.toDouble match {

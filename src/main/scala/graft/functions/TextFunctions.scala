@@ -22,7 +22,7 @@ object TextFunctions {
 
   /** Sentence-ified word salad: six-word '.'-terminated sentences from
     * [[tokens]] — the SHARED span-dedup fixture (the q174/q176 gated
-    * corpus, the Scale q176_fold probe corpus, and the RegistryProbe
+    * corpus, the Scale q176_fold probe corpus, and SCALING.md's registry
     * sweep corpus must all be the same text; a normalization edit in one
     * copy would silently diverge the SCALING probes from the oracle-gated
     * fixture). Zero-token docs emit an empty sentence list — Spark's

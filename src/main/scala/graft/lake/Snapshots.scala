@@ -355,7 +355,7 @@ object Snapshots {
     *
     * `nFiles` ≤ 0 derives the target from `keysPerFile` (file count
     * grows with the registry, file SIZE stays constant — the 128 MB
-    * geometry [[graft.tools.RegistryProbe]] measures).
+    * geometry SCALING.md's "registry probe pruning" measured).
     */
   def reclusterIfFragmented(spark: SparkSession, table: String,
       cols: Seq[String], maxOverlapFrac: Double = 0.3,
@@ -457,8 +457,7 @@ object Snapshots {
     * excluded — it is path-derived on read).
     */
   private def dataSchema(df: DataFrame): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(
-      Lake.withHourPartition(df).schema.filterNot(_.name == Lake.PartitionCol))
+    org.apache.spark.sql.types.StructType(df.schema.filterNot(_.name == Lake.PartitionCol))
 
   /** Claim the next version with `entries` derived from the then-current
     * manifest by `evolve`. Retries on a concurrent claim (staged data files
@@ -704,7 +703,8 @@ object Snapshots {
     // handful of rows, and the generic path pays FOUR driver actions
     // (pk-uniqueness job, match-probe collect, insert anti-join emptiness
     // probe, plus the rewrite) to reach one commit — measured at
-    // ~1.2-1.7 s of pure job floors on a 5-row update (profile-fold).
+    // ~1.2-1.7 s of pure job floors on a 5-row update (BENCHNOTES.md's
+    // sketch-fold profile).
     // When the update pk set fits a driver threshold, ONE limited collect
     // of the pk column replaces the pk job AND the anti-join: duplicates
     // are checked in memory (nulls collide like a groupBy), matched
@@ -727,10 +727,7 @@ object Snapshots {
     // makes the fast path's driver-side Scala == on collected pk values
     // sound (an Int-vs-Long mismatch would otherwise classify every
     // matched update as an insert).
-    val merged = unionSchema(
-      org.apache.spark.sql.types.StructType(
-        lake.schema.filterNot(_.name == Lake.PartitionCol)),
-      updates.schema)
+    val merged = unionSchema(dataSchema(lake), dataSchema(updates))
     val renamed = updates.columns.foldLeft(updates)(
       (d, c) => d.withColumnRenamed(c, "__u_" + c))
     val gated = Lake.sizeGatedBroadcast(renamed)

@@ -245,11 +245,11 @@ object Dedup {
     // caller-persisted frame is trusted ONLY when its cached layout is
     // already hash-partitioned by (a subset of) the bucket key — then
     // every bucket lives in exactly one partition and the self-join
-    // reuses the layout with no exchange (PairBench persists exactly
-    // this layout). Any OTHER persisted layout is re-pinned like an
-    // unpersisted input: trusting it would hand the expanding join an
-    // AQE-sized exchange over slim input bytes — the straggler class
-    // this pin exists to prevent.
+    // reuses the layout with no exchange (the layout the round-15 pairing
+    // A/B persisted, BENCHNOTES.md). Any OTHER persisted layout is
+    // re-pinned like an unpersisted input: trusting it would hand the
+    // expanding join an AQE-sized exchange over slim input bytes — the
+    // straggler class this pin exists to prevent.
     val persistedCoLocated =
       keyed.storageLevel != org.apache.spark.storage.StorageLevel.NONE && {
         import org.apache.spark.sql.catalyst.expressions.AttributeReference
@@ -306,7 +306,7 @@ object Dedup {
     // differs from the pinned layout and its expansion is the extreme
     // case the schedule exists for.
     // EAGER dial over the PINNED input, ONE shuffle-free stage (~0.1 s
-    // at the 30× PairBench shape; the earlier groupBy-count+collect job
+    // at the 30× pairing A/B shape; the earlier groupBy-count+collect job
     // paid a 155k-group shuffle ≈ 0.27 s, and an in-plan broadcast
     // subtree was slower still at 0.37 s — its agg+broadcast stages
     // serialize into the critical path): each partition hash-counts its
@@ -336,8 +336,8 @@ object Dedup {
     // With no hot bucket the whole blocked apparatus — split filters,
     // chunk windows, cell replication — is pure overhead, so the
     // uniform case returns the plain bucket join outright: skew
-    // insurance is only priced when skew exists (PairBench gates the
-    // premium).
+    // insurance is only priced when skew exists (the premium BENCHNOTES.md
+    // measured in the pairing A/B).
     def pairGate: Column = crossBandDedup match {
       case Some(bands) => col("id1") < col("id2") &&
         firstSharedBand(bands) === col("band")
@@ -458,7 +458,9 @@ object Dedup {
     * rounds. Each round is two co-partitioned joins + one min-aggregation;
     * labels localCheckpoint eagerly per round, truncating lineage (the
     * standard requirement for iterative Spark — an uncheckpointed loop
-    * re-executes every prior round per action).
+    * re-executes every prior round per action). A third branch,
+    * label(label(neighbor)), was measured and rejected (BENCHNOTES.md
+    * round 15).
     *
     * @param nodes  (id) — every document to label; docs in no pair become
     *               their own singleton cluster.
@@ -466,20 +468,7 @@ object Dedup {
     * @return (id, cluster_id, cluster_size, is_canonical)
     */
   def duplicateClusters(nodes: DataFrame, pairs: DataFrame,
-      maxRounds: Int = 20): DataFrame =
-    duplicateClustersFanIn(nodes, pairs, maxRounds, neighborDouble = false)
-
-  /** [[duplicateClusters]] with a switchable THIRD propagation branch —
-    * label(label(neighbor)) — per round. Reach per round grows 2r+1
-    * instead of 2r, which can shave one round on odd-diameter cluster
-    * graphs at the price of one extra edge-sized join every round
-    * (tools.CcProbe measures the trade on the q84 input; the default
-    * stays two-branch — see BENCHNOTES round 15).
-    */
-  private[graft] def duplicateClustersFanIn(nodes: DataFrame, pairs: DataFrame,
-      maxRounds: Int = 20, neighborDouble: Boolean = false,
-      roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None)
-      : DataFrame = {
+      maxRounds: Int = 20): DataFrame = {
     // materialize the edge list once: the loop joins it every round, and an
     // unmaterialized frame would re-execute the (expensive) pair-derivation
     // pipeline per round per action. Both endpoints are restricted to
@@ -515,10 +504,6 @@ object Dedup {
       val l2 = labels.select(col("id").as("__lid"), col("label").as("__llabel"))
       val viaDouble = labels.join(l2, labels("label") === l2("__lid"))
         .select(col("id"), col("__llabel").as("label"))
-      val extra =
-        if (!neighborDouble) Nil
-        else Seq(viaNeighbor.join(l2, viaNeighbor("label") === l2("__lid"))
-          .select(col("id"), col("__llabel").as("label")))
       // The convergence probe rides the SAME aggregation (and the same
       // action) as the label update: the current-label branch carries its
       // label in `__old` (exactly one per id — max() recovers it), so
@@ -526,7 +511,7 @@ object Dedup {
       // materializes during the count() — one job per round in the UI,
       // where an eager checkpoint + isEmpty probe was two.
       val proposed = ((labels.select(col("id"), col("label"), col("label").as("__old"))
-        +: (viaNeighbor +: viaDouble +: extra).map(_.select(col("id"),
+        +: Seq(viaNeighbor, viaDouble).map(_.select(col("id"),
           col("label"), lit(null).cast(labelType).as("__old")))): Seq[DataFrame])
         .reduce(_.union(_))
         .groupBy("id").agg(min("label").as("label"), max("__old").as("__old"))
@@ -538,7 +523,6 @@ object Dedup {
       superseded = org.apache.spark.sql.GraftBridge.checkpointRdd(proposed)
       labels = proposed.select("id", "label")
     }
-    roundsOut.foreach(_.set(round))
     // the edge checkpoint served only the loop; the returned frame
     // derives from the FINAL round's labels alone
     org.apache.spark.sql.GraftBridge.checkpointRdd(edges)

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
 
 /** Mergeable quantile sketch — the 100 TB percentile path.
   *

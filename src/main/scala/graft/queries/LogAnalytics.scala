@@ -848,7 +848,7 @@ object LogAnalytics {
         // match probe, rewrite, insert anti-join) reaching the same end
         // state and rewrites the same touched partition anyway — on a
         // per-batch cadence those job floors WERE the fold's cost
-        // (profile-fold: ~1.2-1.7 s per merge vs ~0.5 s this shape, 5-row
+        // (sketch-fold profile: ~1.2-1.7 s per merge vs ~0.5 s this shape, 5-row
         // updates). At scale only batch-touched partitions rewrite.
         cuts.zipWithIndex.foreach { case (cut, i) =>
           val part = ev.filter(cut).groupBy(col("event_type"))

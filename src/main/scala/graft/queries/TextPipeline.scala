@@ -5,7 +5,6 @@ import graft.operators.{Curation, Dedup, Multimodal, Privacy, TextAnalysis}
 import graft.util.Artifacts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import QueryDef._
 
 /** Training-data pipeline operators over the `documents` table:
   * fingerprint/exact dedup, MinHash signatures + LSH candidate pairs with
@@ -737,7 +736,7 @@ object TextPipeline {
 
   private def c4SpanSpliced(s: SparkSession, dir: String): DataFrame = {
     // ONE fixture definition (TextFunctions.sixWordSentences) shared with
-    // the Scale q176_fold probe and RegistryProbe — the SCALING corpora
+    // the Scale q176_fold probe and SCALING.md's registry sweep — the corpora
     // must be the oracle-gated corpus, not a drifting copy
     val sents = graft.functions.TextFunctions.sixWordSentences(col("text"))
     docs(s, dir).select(col("doc_id"),
@@ -2682,7 +2681,6 @@ object TextPipeline {
       "q102_bpe_train",
       (s, dir) => {
         import graft.functions.TextFunctions
-        import graft.operators.Bpe
         val pre = docs(s, dir).filter(col("lang") === "en")
           .select(explode(TextFunctions.bpePreTokens(col("text"))).as("tok"))
           .groupBy(col("tok")).agg(count(lit(1)).as("freq"))
@@ -3743,7 +3741,6 @@ object TextPipeline {
       "q163_unigram_lm",
       (s, dir) => {
         import graft.functions.TextFunctions
-        import graft.operators.Unigram
         // pinned repartition before the tokenize explode (the q105
         // single-row-group lesson)
         val en = docs(s, dir).filter(col("lang") === "en")

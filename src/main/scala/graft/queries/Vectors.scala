@@ -6,7 +6,6 @@ import graft.operators.Similarity
 import graft.util.Artifacts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import QueryDef._
 
 /** Similarity search over the `embeddings` table (64-dim float vectors):
   * brute-force cosine top-k as the exactness baseline, and IVF-bucketed
@@ -150,7 +149,7 @@ object Vectors {
     * round-for-round mirror of [[graft.operators.Similarity.pqTrainCodebook]]'s
     * per-subspace [[graft.operators.Similarity.kmeansTrainInt8]] run.
     */
-  private def sqlLloydSub(j: Int, r: Int, mat: String = ""): String = s"""
+  private def sqlLloydSub(j: Int, r: Int, mat: String): String = s"""
     asg${j}_$r AS $mat(SELECT id, code, cid
               FROM (SELECT s.id, s.code, c.cid,
                       ROW_NUMBER() OVER (PARTITION BY s.id ORDER BY

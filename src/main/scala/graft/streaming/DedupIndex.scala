@@ -51,30 +51,15 @@ object DedupIndex {
     */
   @volatile var lastProbeFiles: Option[(Int, Int)] = None
 
-  /** Measurement/debug toggle: false falls back to full-registry reads
-    * (no file skipping) — the counterfactual the SCALING "registry probe
-    * pruning" table compares against. Production folds leave this true;
-    * results are identical either way (file skipping is sound), only the
-    * I/O differs.
-    */
-  @volatile var keyProbeEnabled: Boolean = true
-
   /** The registries'/indexes' pruned read: zone-map key probe over the
-    * key-clustered files, honoring [[keyProbeEnabled]] (the SCALING
-    * counterfactual toggle) and recording (kept, total) in
-    * [[lastProbeFiles]] when `record` (the two-level indexes record their
-    * FIRST-level keys probe, not the id-domain main probe, so the metric
-    * reads bucket-adjacency pruning).
+    * key-clustered files, recording (kept, total) in [[lastProbeFiles]]
+    * when `record` (the two-level indexes record their FIRST-level keys
+    * probe, not the id-domain main probe, so the metric reads
+    * bucket-adjacency pruning).
     */
   private def probeRead(spark: SparkSession, table: String, keyCol: String,
       probeKeys: DataFrame, record: Boolean = true): DataFrame = {
-    val (reg, kept, total) =
-      if (keyProbeEnabled)
-        Snapshots.readKeyProbe(spark, table, keyCol, probeKeys)
-      else {
-        val n = Snapshots.current(table).map(_.entries.size).getOrElse(0)
-        (Snapshots.read(spark, table), n, n)
-      }
+    val (reg, kept, total) = Snapshots.readKeyProbe(spark, table, keyCol, probeKeys)
     if (record) lastProbeFiles = Some((kept, total))
     reg
   }

@@ -1,34 +1,27 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry, Tables}
-import graft.operators.Dedup
+import graft.{GraftSession, SparkEntry}
+import graft.obs.JobStats
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.storage.StorageLevel
 
 /** The one dev-tool entry point (plan review + steady-state timing):
   *
   * {{{
   *   runMain graft.tools.Dev bench q32_lsh_jaccard [q55_...] [--sf DIR] [--runs N]
+  *   runMain graft.tools.Dev stages q07_topk[,q32_...] [DIR]  # per-stage task profile
   *   runMain graft.tools.Dev explain q05_snowflake_join,q28_token_explode [DIR]
   *   runMain graft.tools.Dev plan q58_decontaminate [DIR]     # exchanges/scans only
-  *   runMain graft.tools.Dev profile-lsh [DIR]                # stage timing
   * }}}
   *
   * `bench` times single queries warm (steady state, noop sink — full
   * column computation, no projection pruning) without paying the full
-  * `graft.Bench` sweep; `explain` prints formatted physical plans;
+  * `graft.Bench` sweep; `stages` lists a steady pass's stages by summed
+  * task time; `explain` prints formatted physical plans;
   * `plan` compresses a plan to its exchanges/scans/broadcasts — the lines
   * a scale review reads first. One shared session/config path
   * (GraftSession) so tool numbers match Bench/Verify behavior.
   */
 object Dev {
-
-  private def session(cpus: Int): SparkSession = {
-    val s = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private def warmup(spark: SparkSession, sfDir: String): Unit = {
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -64,7 +57,7 @@ object Dev {
       // no harness settling for it; steady times must not inflate)
       val settle = flagMap.get("settle").forall(_.toBoolean)
       val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-      val spark = session(cpus)
+      val spark = GraftSession.local(cpus)
       warmup(spark, sfDir)
       for (name <- known; i <- 1 to runs) {
         spark.catalog.clearCache()
@@ -90,24 +83,7 @@ object Dev {
       // comma-separated query list (one session, profiled in turn).
       val stageNames = rest.head.split(',').toSeq
       val dir = rest.lift(1).getOrElse("/root/testdata/sf0.01")
-      val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-      val stats = scala.collection.concurrent.TrieMap
-        .empty[Int, (Long, Long, Int)] // stage -> (sum, max, n)
-      val names = scala.collection.concurrent.TrieMap.empty[Int, String]
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (e.taskInfo != null) {
-              val d = e.taskInfo.duration
-              val (s0, m0, n0) = stats.getOrElse(e.stageId, (0L, 0L, 0))
-              stats(e.stageId) = (s0 + d, math.max(m0, d), n0 + 1)
-            }
-          override def onStageCompleted(
-              e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-            names(e.stageInfo.stageId) =
-              e.stageInfo.name.takeWhile(_ != '\n').take(90)
-        })
+      val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       warmup(spark, dir)
       stageNames.filterNot(SparkEntry.queries.contains)
         .foreach(n => System.err.println(s"[stages] unknown query: $n (skipped)"))
@@ -118,15 +94,17 @@ object Dev {
           .write.mode("overwrite").format("noop").save()
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        stats.clear(); names.clear()
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir)
-          .write.mode("overwrite").format("noop").save()
-        println(f"[stages] $name total ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        Thread.sleep(2000) // listener bus drain
+        val (secs, stats) = JobStats.during(spark) {
+          val t0 = System.nanoTime()
+          SparkEntry.queries(name)(spark, dir)
+            .write.mode("overwrite").format("noop").save()
+          (System.nanoTime() - t0) / 1e9
+        }
+        println(f"[stages] $name total $secs%.2f s")
         println(f"${"stage"}%6s ${"tasks"}%6s ${"sum_s"}%8s ${"max_s"}%8s  site")
-        stats.toSeq.sortBy(-_._2._1).take(12).foreach { case (sid, (s, m, n)) =>
-          println(f"$sid%6d $n%6d ${s / 1e3}%8.2f ${m / 1e3}%8.2f  ${names.getOrElse(sid, "?")}")
+        stats.stages.sortBy(-_.sumMs).take(12).foreach { st =>
+          println(f"${st.id}%6d ${st.tasks}%6d ${st.sumMs / 1e3}%8.2f ${st.maxMs / 1e3}%8.2f  " +
+            st.name.takeWhile(_ != '\n').take(90))
         }
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
@@ -134,7 +112,7 @@ object Dev {
       spark.stop()
 
     case "explain" :: rest =>
-      val spark = session(8)
+      val spark = GraftSession.local(8)
       val dir = rest.lift(1).getOrElse("/root/testdata/sf0.01")
       for (n <- rest.headOption.toSeq.flatMap(_.split(',').toSeq)) {
         println(s"===== $n =====")
@@ -143,7 +121,7 @@ object Dev {
       spark.stop()
 
     case "plan" :: rest =>
-      val spark = session(4)
+      val spark = GraftSession.local(4)
       val dir = rest.lift(1).getOrElse("/root/testdata/sf0.001")
       for (n <- rest.headOption.toSeq.flatMap(_.split(',').toSeq)) {
         println(s"##### $n")
@@ -156,86 +134,9 @@ object Dev {
       }
       spark.stop()
 
-    case "profile-lsh" :: rest =>
-      val spark = session(32)
-      val dir = rest.headOption.getOrElse("/root/testdata/sf0.1")
-      def time[T](label: String)(f: => T): T = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[profile] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      }
-      val docs = Tables.load(spark, dir, "documents")
-      val sets = Dedup.shingleFrame(docs, "doc_id", "text")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      time("shingleFrame materialize") { sets.count() }
-      val cands = Dedup.lshCandidatePairs(sets, bands = 2, rowsPerBand = 3)
-      val nc = time("candidates") { cands.count() }
-      println(s"[profile] n_candidates=$nc")
-      time("verify") { Dedup.jaccardVerify(sets, cands, 0.2).count() }
-      spark.stop()
-
-    case "profile-fold" :: rest =>
-      // phase breakdown of the q121 sketch-lake-fold shape (the 2x-gate
-      // item: is per-fold time the register merge or the lake commit?)
-      val spark = session(32)
-      val dir = rest.headOption.getOrElse("/root/testdata/sf0.1")
-      import graft.operators.Hll
-      import graft.lake.Snapshots
-      import org.apache.spark.sql.functions._
-      def time[T](label: String)(f: => T): T = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[profile] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      }
-      warmup(spark, dir)
-      (1 to 2).foreach { round =>
-        println(s"[profile] --- pass $round (2nd pass = steady) ---")
-        val ev = Tables.load(spark, dir, "events")
-        val table = java.nio.file.Files
-          .createTempDirectory("graft_fold_prof").toString + "/hll"
-        val maxId = time("maxId agg")(
-          ev.agg(max(col("event_id"))).head.getLong(0))
-        val cut2 = maxId - maxId / 3
-        val cuts = Seq(
-          col("event_id") < maxId / 3,
-          col("event_id") >= maxId / 3 && col("event_id") < cut2,
-          col("event_id") >= cut2)
-        val ts0 = lit("2024-01-01 00:00:00").cast("timestamp")
-        cuts.zipWithIndex.foreach { case (cut, i) =>
-          val part = ev.filter(cut).groupBy(col("event_type"))
-            .agg(Hll.sparsify(Hll.registersAgg(col("user_id"))).as("regs"))
-          val staged = time(s"batch$i register agg (checkpoint)")(
-            part.withColumn("ts", ts0).localCheckpoint(true))
-          if (i == 0) time(s"batch$i append commit")(
-            Snapshots.append(staged, table))
-          else {
-            val merged = time(s"batch$i read+merge plan+exec") {
-              val ex = Snapshots.read(spark, table)
-                .select(col("event_type"), col("regs").as("__r0"))
-              staged.join(ex, Seq("event_type"), "left")
-                .select(col("event_type"),
-                  when(col("__r0").isNull, col("regs"))
-                    .otherwise(Hll.sparsify(
-                      Hll.mergeRegistersAuto(col("regs"), col("__r0"))))
-                    .as("regs"), col("ts"))
-                .localCheckpoint(true)
-            }
-            time(s"batch$i mergeUpsert commit")(
-              Snapshots.mergeUpsert(spark, table, merged, "event_type"))
-          }
-        }
-        val folded = Snapshots.read(spark, table)
-          .select(col("event_type"),
-            Hll.estimate(Hll.densify(col("regs"))).as("__folded"))
-        val gate = ev.groupBy(col("event_type"))
-          .agg(countDistinct(col("user_id")).as("n_users"),
-            Hll.approxDistinct(col("user_id")).as("__os"))
-          .join(folded, Seq("event_type"))
-        time("final gate (one-shot + exact + join)")(gate.collect())
-      }
-      spark.stop()
-
     case other =>
       System.err.println(
-        s"usage: Dev bench|explain|plan|profile-lsh|profile-fold ... (got: $other)")
+        s"usage: Dev bench|stages|explain|plan ... (got: $other)")
       sys.exit(2)
   }
 }

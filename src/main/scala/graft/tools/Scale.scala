@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.obs.JobStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -580,9 +580,7 @@ object Scale {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
 
     val nDocs = spark.read.parquet(s"$base/documents.parquet").count()
     val nVecs = spark.read.parquet(s"$base/embeddings.parquet").count()
@@ -607,30 +605,18 @@ object Scale {
     println(s"[scale] generated at $tmp (factor $factor, scaled: " +
       s"${wanted.map(_.mkString(",")).getOrElse("all")})")
 
-    val maxTask = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskInfo != null)
-          maxTask.getAndUpdate(m => math.max(m, e.taskInfo.duration))
-    })
-
     def run(fn: (SparkSession, String) => DataFrame, dir: String): (Double, Long) = {
-      maxTask.set(0)
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.mode("overwrite").format("noop").save()
-      val elapsed = (System.nanoTime() - t0) / 1e9 // cache cleanup is untimed
-      // the listener bus is async: quiesce before reading max-task, so late
-      // TaskEnd events of THIS query are counted here and never leak into
-      // the next query's window (which resets the counter)
-      var last = -1L
-      var tries = 0
-      while (maxTask.get != last && tries < 25) {
-        last = maxTask.get; Thread.sleep(200); tries += 1
+      // the bus is drained before and after the run, so the max task is
+      // this query's alone
+      val (elapsed, stats) = JobStats.during(spark) {
+        val t0 = System.nanoTime()
+        fn(spark, dir).write.mode("overwrite").format("noop").save()
+        (System.nanoTime() - t0) / 1e9 // cache cleanup is untimed
       }
       spark.catalog.clearCache()
       // localCheckpoint blocks bypass catalog cache — free them too
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      (elapsed, maxTask.get)
+      (elapsed, stats.maxTaskMs)
     }
 
     // optional name filter (args 3+): probe a subset without re-running

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.GraftSession
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Symmetric staged-artifact bench staging (r18, the ADVICE-carried
@@ -21,10 +20,7 @@ object StageBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/graft_staged")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     new java.io.File(outDir).mkdirs()
     graft.queries.Vectors.stageArtifacts(spark, sfDir, outDir)
     def q(s: String): String = "\"" + s.flatMap {

@@ -1,6 +1,6 @@
 package graft.transform.managed
 
-import graft.transform.{Grok, TransformDsl}
+import graft.transform.Grok
 import graft.transform.TransformDsl._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._

@@ -15,8 +15,11 @@ import org.apache.spark.sql.types._
   */
 object CloudTrail {
 
-  /** Typed subset of the raw record (the rest is reached via
-    * get_json_object on the raw line — the VariantType-style escape).
+  /** Typed subset of the raw record. `requestParameters` and
+    * `responseElements` are read as strings: for an object, array, number
+    * or boolean the JSON reader returns the value's compact JSON text, so
+    * the one parse yields the `encode_json` form with no second pass over
+    * the line.
     */
   val rawSchema: StructType = StructType(Seq(
     StructField("eventTime", StringType),
@@ -31,6 +34,8 @@ object CloudTrail {
     StructField("managementEvent", BooleanType),
     StructField("readOnly", BooleanType),
     StructField("recipientAccountId", StringType),
+    StructField("requestParameters", StringType),
+    StructField("responseElements", StringType),
     StructField("userIdentity", StructType(Seq(
       StructField("type", StringType),
       StructField("principalId", StringType),
@@ -74,8 +79,8 @@ object CloudTrail {
         col("r.readOnly").as("read_only"),
         col("r.requestID").as("request_id"),
         // encode_json semantics: subtree kept as its JSON text
-        get_json_object(col("json"), "$.requestParameters").as("request_parameters"),
-        get_json_object(col("json"), "$.responseElements").as("response_elements")
+        col("r.requestParameters").as("request_parameters"),
+        col("r.responseElements").as("response_elements")
       ).as("cloudtrail")))
       .drop("r", "json")
     // abort records without a parseable event time (reference P8: missing

@@ -37,7 +37,6 @@ object Cloudflare {
 
   def dns(df: DataFrame): DataFrame = {
     var out = df.withColumn("r", from_json(col("json"), dnsSchema))
-    def g(p: String): Column = getPath(out, p)
     def set(p: String, v: Column): Unit = out = setPath(out, p, v)
 
     set("event.category", array(lit("network")))
@@ -81,7 +80,6 @@ object Cloudflare {
 
   def audit(df: DataFrame): DataFrame = {
     var out = df.withColumn("r", from_json(col("json"), auditSchema))
-    def g(p: String): Column = getPath(out, p)
     def set(p: String, v: Column): Unit = out = setPath(out, p, v)
 
     set("event.category", array(lit("authentication")))

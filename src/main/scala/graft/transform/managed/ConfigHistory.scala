@@ -43,7 +43,6 @@ object ConfigHistory {
 
   def apply(df: DataFrame): DataFrame = {
     var out = df.withColumn("r", from_json(col("json"), rawSchema))
-    def g(p: String): Column = getPath(out, p)
     def set(p: String, v: Column): Unit = out = setPath(out, p, v)
 
     // reference uses now() (no event time in the item); capture time is

@@ -85,7 +85,6 @@ object Inspector {
 
   def apply(df: DataFrame): DataFrame = {
     var out = df.withColumn("r", from_json(col("json"), rawSchema))
-    def g(p: String): Column = getPath(out, p)
     def set(p: String, v: Column): Unit = out = setPath(out, p, v)
     val pv = "r.packageVulnerabilityDetails"
 

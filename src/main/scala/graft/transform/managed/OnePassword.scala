@@ -33,7 +33,6 @@ object OnePassword {
   def apply(df: DataFrame): DataFrame = {
     val parsed = df.withColumn("r", from_json(col("json"), rawSchema))
     var out = parsed.filter(col("r.timestamp").isNotNull) // VRL aborts no-ts rows
-    def g(p: String): Column = getPath(out, p)
     def set(p: String, v: Column): Unit = out = setPath(out, p, v)
 
     set("event.kind", lit("event"))

@@ -54,7 +54,6 @@ object ZeekConn {
   def apply(df: DataFrame): DataFrame = {
     val parsed = df.withColumn("r", from_json(col("json"), rawSchema))
     var out = parsed.filter(col("r.ts").isNotNull) // no-ts records abort
-    def g(p: String): Column = getPath(out, p)
     def set(p: String, v: Column): Unit = out = setPath(out, p, v)
     def r(n: String): Column = col(s"`r`.`$n`")
 

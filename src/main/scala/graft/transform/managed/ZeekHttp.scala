@@ -39,7 +39,6 @@ object ZeekHttp {
   def apply(df: DataFrame): DataFrame = {
     val parsed = df.withColumn("r", from_json(col("json"), rawSchema))
     var out = parsed.filter(col("r.ts").isNotNull)
-    def g(p: String): Column = getPath(out, p)
     def set(p: String, v: Column): Unit = out = setPath(out, p, v)
     def r(n: String): Column = col(s"`r`.`$n`")
 

@@ -43,6 +43,13 @@ object GraftBridge {
       reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit =
     e.registerFunctions(reg)
 
+  /** Block until the listener bus has delivered every event posted so far
+    * (`listenerBus` is private[spark]), so a listener has seen all of an
+    * action's jobs, stages and tasks without a timed wait.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Whether an RDD holds local-checkpoint data (`isLocallyCheckpointed`
     * is private[spark]). Lets the bench sweep drop dead checkpoint
     * blocks between a query's paired runs WITHOUT touching

@@ -39,6 +39,37 @@ class IngestSpec extends SparkSpec {
       == "2023-01-10T21:31:12Z")
   }
 
+  test("cloudtrail request_parameters and response_elements equal get_json_object of the subtree") {
+    // (eventID, requestParameters, responseElements); None leaves the key out
+    val cases = Seq(
+      ("obj", Some("""{"userName":"bob","tags":[1,2.5,{"k":null}],"ok":true}"""), Some("null")),
+      ("spaced", Some("""{ "userName" : "bob", "n": [1, 2.50, 1e3] }"""), Some("""{"a": {}}""")),
+      ("array", Some("""["a", 1, null]"""), None),
+      ("string", Some("\"x\\\"y\\u00e9\""), Some("\"\"")),
+      ("number", Some("42"), Some("-3.25")),
+      ("bool", Some("false"), Some("true")),
+      ("null", Some("null"), Some("null")),
+      ("absent", None, None))
+    val lines = cases.map { case (id, req, resp) =>
+      val fields = Seq(""""eventTime":"2023-01-10T21:31:12Z"""", s""""eventID":"$id"""") ++
+        req.map(v => s""""requestParameters":$v""") ++ resp.map(v => s""""responseElements":$v""")
+      fields.mkString("{", ",", "}")
+    }
+    val framed = Framing.preTransformJsonParse(lines.toDF("message"))
+    val expected = framed.select(
+      get_json_object(col("json"), "$.eventID").as("id"),
+      get_json_object(col("json"), "$.requestParameters").as("req"),
+      get_json_object(col("json"), "$.responseElements").as("resp"))
+      .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+    val got = CloudTrail(framed).select(col("event.id"),
+      col("aws.cloudtrail.request_parameters"), col("aws.cloudtrail.response_elements"))
+      .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+    assert(got.keySet == cases.map(_._1).toSet)
+    assert(got == expected)
+    assert(got("obj")._1 == """{"userName":"bob","tags":[1,2.5,{"k":null}],"ok":true}""")
+    assert(got("null") == ((null, null)) && got("absent") == ((null, null)))
+  }
+
   test("streaming ingest: landing json → transform → lake with sidelining") {
     val tmp = tempDir("graft_ingest")
     val landing = tmp.resolve("landing").toString
@@ -279,14 +310,6 @@ class IngestSpec extends SparkSpec {
 
   private def persistentRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  /** Wait for the async listener bus to deliver what is already posted. */
-  private def quiesce(n: => Int): Int = {
-    var last = -1
-    var tries = 0
-    while (n != last && tries < 25) { last = n; Thread.sleep(200); tries += 1 }
-    n
-  }
-
   test("processBatch scans the landing file once, cache released after the batch") {
     val (_, batch, pipeline) = singlePassFixture("graft_single_pass")
     val p = pipeline("out")
@@ -295,7 +318,8 @@ class IngestSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(scans)
     try {
       Ingest.processBatch(p)(batch, 0L)
-      assert(quiesce(scans.stages.get) == 1,
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+      assert(scans.stages.get == 1,
         "the lake append, the mismatch check and the sideline write must share one scan")
     } finally spark.sparkContext.removeSparkListener(scans)
     assert(persistentRdds == before, "the batch's cache must not outlive the batch")
@@ -368,17 +392,17 @@ class IngestSpec extends SparkSpec {
       SimpleRule("e2", col("event_type") === "e2", severity = "high", threshold = 2,
         windowSeconds = 1800))
     val alertsLake = tmp.resolve("alerts").toString
-    val (_, log) = JobLog.during(spark) {
+    val (_, stats) = graft.obs.JobStats.during(spark) {
       Ingest.processBatch(p)(batch, 0L)
       val hour = Lake.read(spark, p.lakePath).filter(col(Lake.PartitionCol) === "2024-01-01-05")
       val matches = Detection.ruleMatches(hour, rules, xxhash64(col("user_id")))
       val alerts = Alerts.aggregate(spark, matches, Alerts.AlertConfig(1, 3600)).toDF
       Lake.append(Detection.matanoAlertRows(alerts, rules, "events"), alertsLake)
     }
-    val jobs = log.jobs
+    val jobs = stats.jobs
     assert(jobs.nonEmpty)
     val outside = jobs.filterNot(
-      _.execution.exists(e => log.plan(e).contains("InsertIntoHadoopFsRelationCommand")))
+      _.execution.exists(e => stats.plan(e).contains("InsertIntoHadoopFsRelationCommand")))
     assert(outside.isEmpty, s"jobs outside a write: $outside")
     assert(jobs.flatMap(_.execution).distinct.size == 3, "the lake, sideline and alerts writes")
     val broadcasts = jobs.filter(_.tags.contains("broadcast exchange"))

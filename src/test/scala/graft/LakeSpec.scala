@@ -33,8 +33,8 @@ class LakeSpec extends SparkSpec {
     * starts (none).
     */
   private def assertReadParity(path: String): Unit = {
-    val (df, log) = JobLog.during(spark)(Lake.read(spark, path))
-    assert(log.jobs.isEmpty, s"Lake.read started jobs ${log.jobs}")
+    val (df, stats) = graft.obs.JobStats.during(spark)(Lake.read(spark, path))
+    assert(stats.jobs.isEmpty, s"Lake.read started jobs ${stats.jobs}")
     assert(df.schema == spark.read.option("basePath", path).parquet(path).schema)
   }
 

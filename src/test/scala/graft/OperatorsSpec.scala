@@ -1082,15 +1082,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("duplicateClusters: one action per propagation round") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    val execs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet()
-        case _ => ()
-      }
-    }
     // Each round is ONE count() action — the convergence probe rides the
     // same job that materializes the lazy localCheckpoint. That registers
     // 2 SQLExecutionStart events per round (the count + the checkpoint's
@@ -1100,23 +1091,13 @@ class OperatorsSpec extends SparkSpec {
     // (propagate, propagate, confirm), so the difference must be exactly
     // 2 rounds × 2 events. Reintroducing a per-round probe action would
     // show up as a delta of 6.
-    def measure(pairs: org.apache.spark.sql.DataFrame): Int = {
-      execs.set(0)
-      Dedup.duplicateClusters((1L to 3L).toDF("id"), pairs)
-      var last = -1
-      var tries = 0
-      while (execs.get != last && tries < 25) { // async listener bus: quiesce
-        last = execs.get; Thread.sleep(200); tries += 1
-      }
-      execs.get
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val oneRound = measure(Seq.empty[(Long, Long)].toDF("id1", "id2"))
-      val threeRounds = measure(Seq((1L, 2L), (2L, 3L)).toDF("id1", "id2"))
-      assert(threeRounds - oneRound == 4,
-        s"expected 2 extra rounds x 2 events; saw $oneRound -> $threeRounds")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    def measure(pairs: org.apache.spark.sql.DataFrame): Int =
+      graft.obs.JobStats.during(spark)(
+        Dedup.duplicateClusters((1L to 3L).toDF("id"), pairs))._2.executions.size
+    val oneRound = measure(Seq.empty[(Long, Long)].toDF("id1", "id2"))
+    val threeRounds = measure(Seq((1L, 2L), (2L, 3L)).toDF("id1", "id2"))
+    assert(threeRounds - oneRound == 4,
+      s"expected 2 extra rounds x 2 events; saw $oneRound -> $threeRounds")
   }
 
   test("extended PII: SSN issuance exclusions, Luhn-gated cards, IPv6 forms") {

@@ -231,6 +231,24 @@ class SnapshotsSpec extends SparkSpec {
       .head.getString(0) == "2024-03-01-07")
   }
 
+  test("mergeUpsert: an update frame carrying ts_hour commits no ts_hour data column") {
+    val t = tempDir("snap_merge_hourcol").toString
+    Snapshots.append(mkRows(1 to 10, "2024-03-01 05"), t)
+    def nColumns = Snapshots.history(spark, t).orderBy(col("version").desc)
+      .select("n_columns").head.getLong(0)
+    val before = nColumns
+    val updates = Lake.withHourPartition(Seq(
+      (5L, "UPD5", ts("2024-03-01 05:10:00")),
+      (99L, "NEW99", ts("2024-03-01 07:10:00"))).toDF("id", "name", "ts"))
+    assert(updates.columns.contains(Lake.PartitionCol))
+    Snapshots.mergeUpsert(spark, t, updates, "id")
+    val schema = Snapshots.current(t).get.schema.get
+    assert(!schema.fieldNames.contains(Lake.PartitionCol), s"manifest schema: $schema")
+    assert(schema.fieldNames.toSeq == Seq("id", "name", "ts"))
+    assert(nColumns == before)
+    assert(Snapshots.read(spark, t).count() == 11)
+  }
+
   test("mergeUpsert: an Int-typed update pk against a Long lake pk is " +
       "rejected loudly BEFORE any staging I/O (driver-side pk == is only " +
       "sound under identical types)") {
