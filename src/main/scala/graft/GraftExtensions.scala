@@ -12,6 +12,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   *   - `AnchoredStrategy`: plans the anchored-window alert aggregation
   *     ([[graft.plans.AnchoredSession]]) as a native SparkPlan.
+  *   - `MergeAnchoredFolds`: an optimizer rule that turns a union of
+  *     per-setting alert folds over one match frame into one fold with
+  *     per-rule settings ([[graft.plans.AnchoredSession.MergeAnchoredFolds]]).
   *   - `cosine_similarity(a, b)`: fused codegen'd cosine over
   *     array<double> ([[graft.plans.CosineSimilarity]]).
   *   - `common_count(a, b)`: distinct-common-element count over two
@@ -21,6 +24,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.AnchoredSession.AnchoredStrategy)
+    ext.injectOptimizerRule(_ => graft.plans.AnchoredSession.MergeAnchoredFolds)
     GraftExtensions.functions.foreach(ext.injectFunction)
   }
 }

@@ -30,6 +30,18 @@ import org.apache.spark.sql.types.StringType
   * against. The shuffle moves only match keys and timestamps, not event
   * payloads.
   *
+  * Per-rule settings. One fold serves a whole rule pack: [[aggregate]]
+  * takes a default [[AlertConfig]] plus a map from rule name to that
+  * rule's config, applied per (rule_name, dedupe) key, as the reference
+  * applies each match's own rule's `threshold` and `deduplication_window`.
+  * A pack written as one [[aggregate]] per setting, each over
+  * `matches.filter(rule_name isin …)` of one match frame and then
+  * unioned, plans the same single fold: the optimizer rule
+  * `plans.AnchoredSession.MergeAnchoredFolds` merges such a union when
+  * the branches read the same frame with the same keys, their rule sets
+  * are non-null string literals and pairwise disjoint; otherwise each
+  * branch keeps its own scan, shuffle and fold.
+  *
   * Alert ids are deterministic (md5 of key + anchor) rather than random
   * UUIDs: idempotent re-runs produce identical ids, which is what makes
   * exactly-once sink commits retryable.
@@ -96,11 +108,13 @@ object Alerts {
     * its own, stays null in the output, and its alert id hashes
     * `rule|null|ms`, as [[foldKey]] and [[alertId]] give. A match with a
     * null `ts` is dropped, as the reference sidelines records without an
-    * event time (P8); [[foldKey]] cannot order one and throws.
+    * event time (P8); [[foldKey]] cannot order one and throws. Each rule
+    * folds under its `perRule` config, or else `cfg` (a null rule too).
     */
-  def aggregate(spark: SparkSession, matches: DataFrame, cfg: AlertConfig): Dataset[AlertRow] = {
+  def aggregate(spark: SparkSession, matches: DataFrame, cfg: AlertConfig,
+      perRule: Map[String, AlertConfig] = Map.empty): Dataset[AlertRow] = {
     import spark.implicits._
     AnchoredSession.fold(spark, matches, col("rule_name").cast(StringType),
-      col("dedupe").cast(StringType), cfg).as[AlertRow]
+      col("dedupe").cast(StringType), cfg, perRule).as[AlertRow]
   }
 }

@@ -36,19 +36,14 @@ object Alerting {
   private def matches(s: SparkSession, dir: String): DataFrame =
     Detection.ruleMatches(events(s, dir), rules, matchId = col("event_id"))
 
-  /** Alert rows with configs applied per rule (threshold/window vary).
-    * Uses the native AnchoredSession operator (plans.AnchoredSession) —
-    * one hash exchange + sort per rule, streaming InternalRow fold. Each
-    * rule's matches come from its own single-rule `ruleMatches`: a
-    * `rule_name` filter over the whole pack's matches would sit above the
-    * pack's one generator and evaluate every rule per aggregate.
+  /** Alert rows with configs applied per rule (threshold/window vary):
+    * one `ruleMatches` over the whole pack, then one native AnchoredSession
+    * fold (plans.AnchoredSession) with per-rule settings — one hash
+    * exchange + sort for the pack, streaming InternalRow fold.
     */
   private def alerts(s: SparkSession, dir: String): DataFrame =
-    rules.map { r =>
-      graft.plans.AnchoredSession.aggregate(s,
-        Detection.ruleMatches(events(s, dir), Seq(r), matchId = col("event_id")),
-        Alerts.AlertConfig(r.threshold, r.windowSeconds))
-    }.reduce(_.unionAll(_))
+    graft.plans.AnchoredSession.aggregate(s, matches(s, dir), Alerts.AlertConfig(),
+      rules.map(r => r.name -> Alerts.AlertConfig(r.threshold, r.windowSeconds)).toMap)
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.{GraftSession, SparkEntry}
 import graft.obs.JobStats
+import graft.util.Artifacts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,6 +20,9 @@ import org.apache.spark.sql.functions._
   * Everything is generated with codegen'd expressions (range → transform
   * over xxhash64 draws) — deterministic, no driver-side loops, so the 10×
   * corpus itself materializes at cluster speed.
+  *
+  * The scaled corpus and every per-run lake the family stages are
+  * [[graft.util.Artifacts.scratch]] dirs, deleted when the JVM exits.
   */
 object Scale {
 
@@ -178,7 +182,7 @@ object Scale {
         val ev = graft.Tables.load(s, dir, "events") // ns-ts normalization
         val cfg = Alerts.AlertConfig(threshold = 2, windowSeconds = 1800)
         val cut = lit("2024-01-06 14:10:00").cast("timestamp")
-        val t = java.nio.file.Files.createTempDirectory("graft_scale_retro").toString
+        val t = Artifacts.scratch("graft_scale_retro")
         val m = Detection.ruleMatches(ev,
           graft.queries.Alerting.rules.filter(_.name == "error_burst"),
           matchId = col("event_id"))
@@ -311,8 +315,7 @@ object Scale {
         "q140_blocked_pairs" -> SparkEntry.queries("q140_blocked_pairs"),
         "q109_fold" -> ((s: SparkSession, dir: String) => {
           import graft.lake.Snapshots
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_scale_idx").toString
+          val t = Artifacts.scratch("graft_scale_idx")
           graft.queries.Search.indexFold(s,
             s.read.parquet(s"$dir/documents.parquet"), s"$t/index")
           Snapshots.read(s, s"$t/index").select(col("term"))
@@ -327,8 +330,7 @@ object Scale {
           import graft.streaming.DedupIndex
           val base = s.read.parquet(s"$dir/documents.parquet")
             .select(col("doc_id"), col("text"))
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_scale_lsh").toString
+          val t = Artifacts.scratch("graft_scale_lsh")
           val maxBase = base.agg(max(col("doc_id"))).head.getLong(0)
           val cuts = Seq(
             col("doc_id") < maxBase / 3,
@@ -349,8 +351,7 @@ object Scale {
           import graft.streaming.DedupIndex
           val base = s.read.parquet(s"$dir/documents.parquet")
             .select(col("doc_id"), col("text"))
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_scale_para").toString
+          val t = Artifacts.scratch("graft_scale_para")
           val maxBase = base.agg(max(col("doc_id"))).head.getLong(0)
           val cuts = Seq(
             col("doc_id") < maxBase / 3,
@@ -403,8 +404,7 @@ object Scale {
           import graft.operators.Release
           val d = s.read.parquet(s"$dir/documents.parquet")
             .select(col("doc_id"), col("lang"), col("n_chars"))
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_scale_rel").toString
+          val t = Artifacts.scratch("graft_scale_rel")
           Release.buildEdition(s, d, "doc_id", "lang", "n_chars",
             1000L, 9L, 10L, 1L, s"$t/editionA")
           Release.buildEdition(s, d, "doc_id", "lang", "n_chars",
@@ -419,8 +419,7 @@ object Scale {
           import graft.streaming.AllocationFold
           val d = s.read.parquet(s"$dir/documents.parquet")
             .select(col("doc_id"), col("lang"), col("n_chars"))
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_scale_alloc").toString
+          val t = Artifacts.scratch("graft_scale_alloc")
           val maxId = d.agg(max(col("doc_id"))).head.getLong(0)
           Seq(
             col("doc_id") < maxId / 3,
@@ -442,8 +441,7 @@ object Scale {
           import graft.streaming.AllocationFold
           val d = s.read.parquet(s"$dir/documents.parquet")
             .select(col("doc_id"), col("lang"), col("n_chars"))
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_scale_take").toString
+          val t = Artifacts.scratch("graft_scale_take")
           val maxId = d.agg(max(col("doc_id"))).head.getLong(0)
           Seq(
             col("doc_id") < maxId / 3,
@@ -465,8 +463,7 @@ object Scale {
             .select(col("doc_id"), col("lang"),
               size(graft.functions.TextFunctions.tokens(col("text")))
                 .cast("long").as("n_tokens"))
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_scale_pack").toString
+          val t = Artifacts.scratch("graft_scale_pack")
           val maxId = d.agg(max(col("doc_id"))).head.getLong(0)
           Seq(
             col("doc_id") < maxId / 3,
@@ -485,8 +482,7 @@ object Scale {
             .sixWordSentences(col("text"))
           val base = s.read.parquet(s"$dir/documents.parquet")
             .select(col("doc_id"), array_join(sents, " ").as("text"))
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_scale_span").toString
+          val t = Artifacts.scratch("graft_scale_span")
           val maxBase = base.agg(max(col("doc_id"))).head.getLong(0)
           val cuts = Seq(
             col("doc_id") < maxBase / 3,
@@ -516,8 +512,7 @@ object Scale {
           SparkEntry.queries("q200_importance_surrogate"),
         "q199_pipeline" -> ((s: SparkSession, dir: String) => {
           import graft.operators.WebCuration
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_scale_webpipe").toString
+          val t = Artifacts.scratch("graft_scale_webpipe")
           WebCuration.run(s,
             graft.queries.TextPipeline.webPipelineCorpus(s, dir), t,
             suffixes = Seq("com", "net", "org", "de", "uk", "co.uk", "io"),
@@ -531,8 +526,7 @@ object Scale {
         "q201_factory_diff" -> ((s: SparkSession, dir: String) => {
           import graft.lake.Snapshots
           import graft.operators.{Release, WebCuration}
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_scale_factory").toString
+          val t = Artifacts.scratch("graft_scale_factory")
           WebCuration.run(s,
             graft.queries.TextPipeline.webPipelineCorpus(s, dir),
             s"$t/pipe",
@@ -558,8 +552,7 @@ object Scale {
         "q202_fold" -> ((s: SparkSession, dir: String) => {
           import graft.operators.WebCuration
           val d = graft.queries.TextPipeline.webPipelineCorpus(s, dir)
-          val t = java.nio.file.Files
-            .createTempDirectory("graft_scale_webfold").toString
+          val t = Artifacts.scratch("graft_scale_webfold")
           val maxId = d.agg(max(col("doc_id"))).head.getLong(0)
           Seq(
             col("doc_id") < maxId / 3,
@@ -587,7 +580,7 @@ object Scale {
     val baseEv = spark.read.parquet(s"$base/events.parquet")
     val nEv = baseEv.count()
     val nUsers = baseEv.select(countDistinct(col("user_id"))).head.getLong(0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scale").toString
+    val tmp = Artifacts.scratch("graft_scale")
     // GRAFT_SCALE_TABLES=documents[,events,...]: scale only the listed
     // tables and carry the others over at BASE size — makes a 100× docs
     // probe feasible without generating 100M events. Ratios are only

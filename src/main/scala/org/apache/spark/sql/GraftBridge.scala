@@ -39,6 +39,11 @@ object GraftBridge {
       : Seq[org.apache.spark.sql.execution.SparkStrategy] =
     e.buildPlannerStrategies(spark)
 
+  def optimizerRules(e: SparkSessionExtensions, spark: SparkSession)
+      : Seq[org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
+    e.buildOptimizerRules(spark)
+
   def applyExtensionFunctions(e: SparkSessionExtensions,
       reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit =
     e.registerFunctions(reg)

@@ -2,12 +2,18 @@ package graft
 
 import graft.operators.{Alerts, Detection}
 import graft.plans.AnchoredSession
+import graft.plans.AnchoredSession.{AnchoredSessionAgg, AnchoredSessionExec}
 import graft.queries.Alerting
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** Native anchored-session operator: result parity with the typed fold it
-  * replaced (`TypedAlertFold`), the null contract of `Alerts.aggregate`, and
-  * the expected physical shape (one shuffle, sorted input).
+  * replaced (`TypedAlertFold`), the null contract of `Alerts.aggregate`,
+  * the expected physical shape (one shuffle, sorted input), per-rule
+  * settings, and the `MergeAnchoredFolds` rewrite with its preconditions.
   */
 class AnchoredSessionSpec extends SparkSpec {
   import spark.implicits._
@@ -101,5 +107,107 @@ class AnchoredSessionSpec extends SparkSpec {
     assert(out(1).getAs[Long]("match_count") == 1 && !out(1).getAs[Boolean]("activated"))
     assert(out(1).isNullAt(out(1).fieldIndex("created_at")))
     assert(out(2).getAs[String]("dedupe") == "z")
+  }
+
+  test("per-rule settings: the fold equals Alerts.foldKey per key under that rule's config") {
+    import Alerts.{AlertConfig, MatchRow}
+    val rnd = new scala.util.Random(20261022L)
+    val t0 = ts("2024-01-01 00:00:00").getTime
+    val names = Seq("a", "b", "c", null)
+    for (_ <- 1 to 6) {
+      // windows and times on a one-minute grid, so matches tie with each
+      // other and land exactly on a window's edge
+      val perRule = Seq("a", "b", "c").map(r =>
+        r -> AlertConfig(1 + rnd.nextInt(4), 60L * (1 + rnd.nextInt(5)))).toMap
+      val default = AlertConfig(1 + rnd.nextInt(4), 60L * (1 + rnd.nextInt(5)))
+      val named = perRule - names(rnd.nextInt(3)) // one rule folds under the default
+      val in = (1 to 300).map { i =>
+        MatchRow(names(rnd.nextInt(names.size)),
+          if (rnd.nextInt(4) == 0) null else s"k${rnd.nextInt(3)}", i.toLong,
+          new java.sql.Timestamp(t0 + 60000L * rnd.nextInt(40)))
+      }
+      val got = Alerts.aggregate(spark, in.toDF(), default, named).collect()
+      val expected = in.groupBy(m => (m.rule_name, m.dedupe)).toSeq.flatMap { case ((r, d), ms) =>
+        Alerts.foldKey(r, d, ms.sortBy(m => Alerts.tsToUs(m.ts)),
+          Option(r).flatMap(named.get).getOrElse(default))
+      }
+      assert(got.length == expected.size)
+      assert(got.toSet == expected.toSet)
+    }
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** A three-setting pack over the sf events: the filters take the
+    * optimizer's `=`, `IN` and `InSet` (over ten names) forms.
+    */
+  private val pack: Seq[(Alerts.AlertConfig, Seq[String])] = Seq(
+    Alerts.AlertConfig(2, 1800) -> Seq("error_burst"),
+    Alerts.AlertConfig(1, 3600) -> Seq("big_purchase", "signup"),
+    Alerts.AlertConfig(3, 600) -> ("view_run" +: (1 to 10).map(i => s"absent_$i")))
+
+  private def packMatches(events: DataFrame) = Detection.ruleMatches(events, Seq(
+    Detection.SimpleRule("error_burst", col("event_type") === "error", col("user_id")),
+    Detection.SimpleRule("big_purchase",
+      col("event_type") === "purchase" && col("value") > 190.0, col("user_id")),
+    Detection.SimpleRule("signup", col("event_type") === "signup", col("user_id")),
+    Detection.SimpleRule("view_run", col("event_type") === "view", col("user_id"))),
+    matchId = col("event_id"))
+
+  /** One `Alerts.aggregate` per setting over `m` filtered to its rules. */
+  private def perSetting(m: DataFrame, settings: Seq[(Alerts.AlertConfig, Seq[String])]) =
+    settings.map { case (cfg, rs) =>
+      Alerts.aggregate(spark, m.filter(col("rule_name").isin(rs: _*)), cfg).toDF()
+    }
+
+  private def folds(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect { case a: AnchoredSessionAgg => a }.size
+
+  test("MergeAnchoredFolds: a union of per-setting folds over one match frame is one scan, one shuffle, one fold") {
+    val m = packMatches(Tables.load(spark, sf, "events"))
+    val parts = perSetting(m, pack)
+    val union = parts.reduce(_.unionByName(_))
+    val got = union.collect()
+    val plan = union.queryExecution.executedPlan
+    assert(Plans.collect(plan) { case s: FileSourceScanExec => s }.size == 1)
+    assert(Plans.collect(plan) { case e: ShuffleExchangeExec => e }.size == 1)
+    assert(Plans.collect(plan) { case a: AnchoredSessionExec => a }.size == 1)
+    assert(folds(union) == 1)
+    val oneAtATime = parts.flatMap(_.collect())
+    assert(pack.forall { case (_, rs) => oneAtATime.exists(r => rs.contains(r.getString(0))) })
+    assert(got.length == oneAtATime.length)
+    assert(got.toSet == oneAtATime.toSet)
+  }
+
+  test("MergeAnchoredFolds leaves overlapping sets, non-literal predicates, other inputs and other dedupes unmerged") {
+    val events = Tables.load(spark, sf, "events")
+    val m = packMatches(events)
+    val cfg = Alerts.AlertConfig(2, 1800)
+    def check(parts: Seq[DataFrame]): Unit = {
+      val union = parts.reduce(_.unionByName(_))
+      assert(folds(union) == parts.size, union.queryExecution.optimizedPlan.treeString)
+      val expected = parts.flatMap(_.collect())
+      assert(expected.nonEmpty)
+      assert(union.collect().sortBy(_.toString).toSeq == expected.sortBy(_.toString))
+    }
+    // overlapping rule sets
+    check(perSetting(m, Seq(cfg -> Seq("error_burst", "signup"),
+      Alerts.AlertConfig(1, 3600) -> Seq("signup", "view_run"))))
+    // a rule predicate that is no literal set
+    check(Seq(
+      Alerts.aggregate(spark, m.filter(col("rule_name") === "error_burst"), cfg).toDF(),
+      Alerts.aggregate(spark, m.filter(col("rule_name").startsWith("sign")),
+        Alerts.AlertConfig(1, 3600)).toDF()))
+    // different inputs
+    check(Seq(
+      Alerts.aggregate(spark, m.filter(col("rule_name") === "error_burst"), cfg).toDF(),
+      Alerts.aggregate(spark, packMatches(events.filter(col("value") > 100.0))
+        .filter(col("rule_name") === "signup"), Alerts.AlertConfig(1, 3600)).toDF()))
+    // different dedupe expressions
+    check(Seq(
+      AnchoredSession.fold(spark, m.filter(col("rule_name") === "error_burst"),
+        col("rule_name"), col("dedupe"), cfg),
+      AnchoredSession.fold(spark, m.filter(col("rule_name") === "signup"),
+        col("rule_name"), concat(col("dedupe"), lit("/")), Alerts.AlertConfig(1, 3600))))
   }
 }

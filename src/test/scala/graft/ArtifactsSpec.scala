@@ -172,4 +172,17 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "memoize through graft.util.Artifacts instead: " + offenders.mkString(", "))
   }
+
+  test("in src/main, only util/Artifacts.scala makes a temp dir") {
+    import scala.jdk.CollectionConverters._
+    val main = new File("src/main/scala")
+    assert(main.isDirectory, s"main sources not found under ${main.getAbsolutePath}")
+    val offenders = Files.walk(main.toPath).iterator().asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala") && !p.endsWith("graft/util/Artifacts.scala"))
+      .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains("createTempDirectory") => s"$p:${i + 1}"
+      })
+    assert(offenders.isEmpty,
+      "make scratch dirs through graft.util.Artifacts.scratch: " + offenders.mkString(", "))
+  }
 }

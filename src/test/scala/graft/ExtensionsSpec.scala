@@ -14,6 +14,8 @@ class ExtensionsSpec extends SparkSpec {
     // strategy present for a config-only session
     assert(org.apache.spark.sql.GraftBridge.plannerStrategies(ext, spark)
       .contains(graft.plans.AnchoredSession.AnchoredStrategy))
+    assert(org.apache.spark.sql.GraftBridge.optimizerRules(ext, spark)
+      .contains(graft.plans.AnchoredSession.MergeAnchoredFolds))
     // functions resolve through a registry the extensions populated
     val reg = org.apache.spark.sql.GraftBridge.cloneFunctionRegistry(spark)
     Seq("cosine_similarity", "common_count").foreach(f =>
